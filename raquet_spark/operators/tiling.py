@@ -32,7 +32,6 @@ def from_pixel_table(
     metadata: dict,
     compression: str | None = "gzip",
     extra_keys: tuple[tuple[str, str], ...] = (),
-    aligned: bool = False,
 ) -> DataFrame:
     """(gx, gy, band...) rows → (block, band...) tile rows.
 
@@ -56,18 +55,9 @@ def from_pixel_table(
     semantics (numpy C-cast vs Spark's NULL/0), so only the provably
     bit-identical narrowing ships.
 
-    ``aligned=True`` (r17): the caller GUARANTEES each tile's pixel
-    rows are contiguous within one partition (the importers' broadcast
-    gather over a block-major target grid — see
-    ``tiff_reader._resampled_pixels``). The tile assembly then needs
-    no exchange: a ``mapInPandas`` streams each partition, cutting on
-    block-id change points, and the conversion becomes map-only end to
-    end (guide §2.4/§8). The contiguity contract is asserted (a block
-    id must never recur after its flush); a violated assert fails the
-    job rather than emitting a half tile. Rows of one block may
-    interleave ``extra_keys`` values (a broadcast time-step gather
-    emits all steps per pixel) — the block buffer is sub-grouped on
-    flush."""
+    The importers' warp reaches this assembly only for sources past
+    the broadcast class (``tiff_reader.warp_tiles``); smaller ones
+    build their tiles in the per-tile kernel instead."""
     from raquet_spark.session import ensure_package_shipped
 
     ensure_package_shipped(pixels.sparkSession)
@@ -112,62 +102,6 @@ def from_pixel_table(
         [f"{n} {typ}" for n, typ in extra_keys]
         + [f"{name} binary" for name, _, _ in bands]
     )
-
-    if aligned:
-
-        def assemble_stream(batches):
-            cur = None
-            buf: list[pd.DataFrame] = []
-            seen: set[int] = set()
-
-            def flush():
-                pdf = (
-                    pd.concat(buf, ignore_index=True)
-                    if len(buf) > 1 else buf[0]
-                )
-                if extra_names:
-                    for kv, sub in pdf.groupby(extra_names, sort=True):
-                        key = (cur, *(kv if isinstance(kv, tuple) else (kv,)))
-                        yield assemble(key, sub)
-                else:
-                    yield assemble((cur,), pdf)
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                blocks = pdf["block"].to_numpy()
-                cuts = (np.flatnonzero(blocks[1:] != blocks[:-1]) + 1).tolist()
-                start = 0
-                for cut in [*cuts, len(pdf)]:
-                    b = int(blocks[start])
-                    if cur is not None and b != cur:
-                        yield from flush()
-                        seen.add(cur)
-                        buf = []
-                    # contiguity contract: a flushed block must never
-                    # recur (tile-whole partitions, order-preserving
-                    # map-only plan) — fail loudly, never a half tile.
-                    # ValueError, not assert: python -O strips asserts
-                    # (ADVICE r17). `seen` is per-task, so only
-                    # WITHIN-partition recurrence is detectable here; a
-                    # block split ACROSS partitions cannot recur in one
-                    # task's stream — that contract is owned by the
-                    # tile-whole generation partitioning
-                    # (_resampled_pixels: one range row per tile,
-                    # never split) and pinned by
-                    # test_aligned_tiling_matches_grouped.
-                    if b in seen:
-                        raise ValueError(
-                            f"aligned tiling: block {b} recurred after "
-                            "flush — input is not tile-contiguous"
-                        )
-                    cur = b
-                    buf.append(pdf.iloc[start:cut])
-                    start = cut
-            if buf:
-                yield from flush()
-
-        return keyed.mapInPandas(assemble_stream, schema=schema)
 
     keyed = pin_group_width(
         keyed, "block", *extra_names,

@@ -1805,9 +1805,9 @@ def grib2_to_raquet(
     percentile: int | None = None,
 ):
     """GRIB2 → RaQuet tiles on the mercator grid, forecast steps as
-    ``time_cf`` — the same single-warp-shuffle + single-tiling-shuffle
-    pipeline as :func:`netcdf.netcdf_to_raquet` (the two formats carry
-    the same regular-lat/lon + time-steps shape). ``member``/
+    ``time_cf`` — the same warp as :func:`netcdf.netcdf_to_raquet`
+    (:func:`tiff_reader.warp_tiles`; the two formats carry the same
+    grid + time-steps shape). ``member``/
     ``threshold``/``percentile`` select one ensemble member /
     probability threshold / percentile value out of a multi-member,
     exceedance, or percentile archive (PDT 4.1/4.11, 4.5/4.9, and
@@ -1816,15 +1816,11 @@ def grib2_to_raquet(
 
     from raquet_spark.core.metadata import BandMeta, build_metadata
     from raquet_spark.operators.tile_stats import with_tile_stats
-    from raquet_spark.operators.tiling import from_pixel_table
     from raquet_spark.sources.tiff_reader import (
-        _fused_gather_eligible,
-        _fused_gather_tiles,
         _lonlat_corners,
         _pick_zoom,
-        _resampled_pixels,
         _tile_aligned_bounds,
-        gather_is_broadcast,
+        warp_tiles,
     )
 
     g = read_grib2_structure(path)
@@ -1859,32 +1855,11 @@ def grib2_to_raquet(
         compression=compression,
         tile_statistics=stats,
     )
-    if _fused_gather_eligible(info, resampling, len(times)):
-        # join-free separable gather (r18): broadcast grid + index
-        # vectors, one map-only tile build (see _fused_gather_tiles);
-        # Gaussian (lat_centers) grids qualify — their fsy is the same
-        # driver-computed row vector the rowmap join used
-        tiles = _fused_gather_tiles(
-            spark, px, info, z, block_size, (tx0, ty0, tx1, ty1), meta,
-            compression, extra_key="time_cf" if len(times) > 1 else None,
-            resampling=resampling,
-        )
-    else:
-        pixels = _resampled_pixels(
-            spark, px, info, z, block_size, resampling, (tx0, ty0, tx1, ty1),
-            extra_cols=("time_cf",) if len(times) > 1 else (),
-            n_steps=len(times),
-        )
-        tiles = from_pixel_table(
-            pixels, meta, compression=compression,
-            extra_keys=((("time_cf", "double"),) if len(times) > 1 else ()),
-            # map-only assembly (r17): broadcast near gather over the
-            # block-major target grid → tile-contiguous pixels, no tiling
-            # exchange (see from_pixel_table)
-            aligned=(
-                resampling == "near" and gather_is_broadcast(info, len(times))
-            ),
-        )
+    tiles = warp_tiles(
+        spark, px, info, meta, (tx0, ty0, tx1, ty1), resampling,
+        extra_key="time_cf" if len(times) > 1 else None,
+        n_steps=len(times),
+    )
     if len(times) > 1:
         meta["time"] = {
             "count": len(times), "values_cf": times,

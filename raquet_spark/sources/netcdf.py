@@ -11,9 +11,9 @@ small coordinate variables (lat/lon/time) on the driver, and decodes
 the data variable DISTRIBUTED: row-range chunk tasks fan out through
 ``mapInPandas``, each task seeking its byte range — the same shape as
 the GeoTIFF segment decode (tiff_reader.tiff_pixel_table). The warp to
-the RaQuet mercator grid reuses the target-driven warp; all time steps move
-through ONE warp shuffle and ONE tiling shuffle (``time_cf`` rides as
-an extra group key).
+the RaQuet mercator grid is the shared import route
+(tiff_reader.warp_tiles); every time step rides the same warp
+(``time_cf`` is an extra tile key).
 
 Scope: classic CDF-1/CDF-2/CDF-5 parsed here; NetCDF-4 (HDF5 container)
 dispatches to the from-scratch reader in sources/hdf5.py (same
@@ -274,8 +274,8 @@ def netcdf_pixel_table(
 
     ``local=True`` (r18): run the SAME decode generator over the same
     task list on the driver and return one pandas DataFrame — for the
-    fused gather path, whose next step is a driver collect anyway
-    (`_fused_gather_tiles`). Classic-format slabs are raw byte ranges
+    broadcast-class warp, whose next step is a driver collect anyway
+    (`tiff_reader.warp_tiles`). Classic-format slabs are raw byte ranges
     (no compression), so a ≤100 MB broadcast-class decode is
     memcpy-speed; values are identical by construction (same
     function). NetCDF-4/HDF5 stays distributed (chunk decompression
@@ -380,20 +380,16 @@ def netcdf_to_raquet(
     """Classic NetCDF → RaQuet tiles on the mercator grid, CF time
     preserved: rows keyed ``(block, time_cf)`` with a derived
     ``time_ts`` and ``cf:``-prefixed time metadata (spec time columns;
-    reference cli.py:92 convert path). All steps share one warp shuffle
-    and one tiling shuffle."""
+    reference cli.py:92 convert path). All steps share one warp
+    (:func:`tiff_reader.warp_tiles`)."""
     from raquet_spark.core.metadata import BandMeta, build_metadata
     from raquet_spark.operators.tile_stats import with_tile_stats
-    from raquet_spark.operators.tiling import from_pixel_table
     from raquet_spark.operators.time_dim import parse_cf_units, with_time_ts
     from raquet_spark.sources.tiff_reader import (
-        _fused_gather_eligible,
-        _fused_gather_tiles,
         _lonlat_corners,
         _pick_zoom,
-        _resampled_pixels,
         _tile_aligned_bounds,
-        gather_is_broadcast,
+        warp_tiles,
     )
 
     nc = read_netcdf_structure(path)
@@ -440,22 +436,13 @@ def netcdf_to_raquet(
     has_time = time_name is not None and (
         v["record"] or (v["dims"] and v["dims"][0] == _short(time_name))
     )
-    extra = ("time_cf",) if has_time else ()
-    # step count sizes the warp gather's broadcast decision: the px
-    # table holds one full grid per step, so a small grid x many steps
-    # must NOT broadcast (driver OOM / 8 GB limit at archive scale)
+    # step count sizes the warp's size class: the px table holds one
+    # full grid per step, so a small grid x many steps must NOT
+    # broadcast (driver OOM / 8 GB limit at archive scale)
     n_steps = len(read_coord_var(nc, time_name)) if has_time else 1
     (w, s, e, n), (tx0, ty0, tx1, ty1) = _tile_aligned_bounds(
         _lonlat_corners(info), z
     )
-    # target-driven inverse-mapped warp (GDAL semantics, dense output);
-    # every time step rides the same (sx, sy) gather join — each source
-    # cell matches all its steps' rows. bilinear/cubic blend per step
-    # because time_cf is part of the join row.
-    if resampling not in ("near", "bilinear", "cubic"):
-        raise ValueError(
-            f"netcdf resampling {resampling!r} (near/bilinear/cubic)"
-        )
     meta = build_metadata(
         bands=[BandMeta(name="band_1", type=info["dtype"], nodata=nodata,
                         colorinterp="gray")],
@@ -469,37 +456,18 @@ def netcdf_to_raquet(
         compression=compression,
         tile_statistics=stats,
     )
-    if _fused_gather_eligible(info, resampling, n_steps):
-        # join-free separable gather (r18): broadcast grid + index
-        # vectors, one map-only tile build (see _fused_gather_tiles).
-        # Classic slabs decode on the DRIVER (raw byte ranges, no
-        # compression — the fused path collects them there anyway;
-        # NetCDF-4 keeps the distributed decode: chunk decompression
-        # is real CPU)
-        px_in = (
-            netcdf_pixel_table(spark, nc, var, local=True)
-            if nc.get("format") != "hdf5"
-            else netcdf_pixel_table(spark, nc, var)
-        )
-        tiles = _fused_gather_tiles(
-            spark, px_in, info, z, block_size, (tx0, ty0, tx1, ty1), meta,
-            compression, extra_key="time_cf" if has_time else None,
-            resampling=resampling,
-        )
-    else:
-        px = netcdf_pixel_table(spark, nc, var)
-        pixels = _resampled_pixels(
-            spark, px, info, z, block_size, resampling, (tx0, ty0, tx1, ty1),
-            extra_cols=extra, n_steps=n_steps,
-        )
-        tiles = from_pixel_table(
-            pixels, meta, compression=compression,
-            extra_keys=((("time_cf", "double"),) if has_time else ()),
-            # map-only assembly (r17): a broadcast near gather over the
-            # block-major target grid delivers tile-contiguous pixels —
-            # no tiling exchange needed (see from_pixel_table)
-            aligned=(resampling == "near" and gather_is_broadcast(info, n_steps)),
-        )
+    tiles = warp_tiles(
+        spark, netcdf_pixel_table(spark, nc, var), info, meta,
+        (tx0, ty0, tx1, ty1), resampling,
+        extra_key="time_cf" if has_time else None, n_steps=n_steps,
+        # classic slabs are raw byte ranges: decode them on the driver
+        # when the route collects them there anyway; NetCDF-4 chunk
+        # decompression is real CPU and stays distributed
+        local_px=(
+            (lambda: netcdf_pixel_table(spark, nc, var, local=True))
+            if nc.get("format") != "hdf5" else None
+        ),
+    )
     if has_time:
         units = str(nc["variables"][time_name]["attrs"].get("units", ""))
         calendar = str(

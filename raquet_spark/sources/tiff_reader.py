@@ -13,17 +13,17 @@ Three layers:
    source-grid pixel rows. The file must be on storage all executors
    can reach (shared FS / object store), the same contract GDAL's
    windowed reads have on a cluster.
-3. ``geotiff_to_raquet`` — Spark-first warp to the web-mercator tile
-   grid: each SOURCE pixel is forward-mapped to the target pixel grid
-   (closed-form EPSG:4326/3857 math as Column expressions), then one
-   ``groupBy(target pixel)`` keeps the source sample nearest to the
-   target pixel center (deterministic tiebreak) — GDAL's
-   nearest-neighbor warp as a single relational shuffle. The target
-   zoom is chosen so the mercator resolution at the raster's center
-   latitude is at least as fine as the source (every target pixel gets
-   ≥1 source sample, so forward mapping leaves no holes), matching the
-   reference's zoom autoselect intent (raster2raquet.py find_zoom).
-   The result feeds ``operators/tiling.from_pixel_table`` → RaQuet.
+3. ``geotiff_to_raquet`` — warp to the web-mercator tile grid with
+   GDAL's inverse-mapping semantics: each TARGET pixel center maps in
+   closed form (Snyder forward projections for projected CRS) to
+   fractional source coordinates, sampled ``near``/``bilinear``/
+   ``cubic`` through ``warp_tiles`` — the one route, shared with the
+   NetCDF and GRIB importers, whose two size classes it documents.
+   The reducing kernels (average/mode/…) forward-map every source
+   sample and reduce per target pixel instead. The target zoom keeps
+   the mercator resolution at the raster's center latitude at least
+   as fine as the source, matching the reference's zoom autoselect
+   intent (raster2raquet.py find_zoom).
 
 Supported: classic AND BigTIFF, little- ("II") and big-endian ("MM"),
 strip or tile layout, compression none/LZW/deflate/PackBits
@@ -428,11 +428,11 @@ def tiff_pixel_table(
 
     ``local=True`` (r18): run the SAME chunky decode generator over the
     same segment list on the driver and return one pandas DataFrame —
-    for the fused gather path, whose next step is a driver collect
-    anyway. Callers gate it to UNCOMPRESSED chunky sources
-    (compression 1, planar 1): those segments are raw byte ranges, so
-    a ≤100 MB broadcast-class decode is memcpy-speed; compressed and
-    planar layouts keep the distributed decode."""
+    for the broadcast-class warp (:func:`warp_tiles`), whose next step
+    is a driver collect anyway. Callers gate it to UNCOMPRESSED chunky
+    sources (compression 1, planar 1): those segments are raw byte
+    ranges, so a ≤100 MB broadcast-class decode is memcpy-speed;
+    compressed and planar layouts keep the distributed decode."""
     from raquet_spark.session import ensure_package_shipped
 
     if local:
@@ -1524,14 +1524,11 @@ def _kernel_sql(d: str, resampling: str) -> str:
 
 
 def gather_is_broadcast(info: dict, n_steps: int = 1) -> bool:
-    """Whether the warp gather join will broadcast the source (raw
-    source bytes × steps ≤ ~100 MB — see the strategy comment inside
-    :func:`_resampled_pixels`). The SINGLE definition shared by the
-    join-strategy decision and the importers' tile-assembly
-    ``aligned`` decision (r17): a broadcast gather is map-only, so
-    with the block-major target grid the ``near`` path's pixels reach
-    ``from_pixel_table`` tile-contiguous and the assembly can skip
-    its exchange."""
+    """Whether the source is in the broadcast size class (raw source
+    bytes × steps ≤ ~100 MB). The SINGLE size-class definition:
+    :func:`warp_tiles` routes every import on it, and
+    :func:`_resampled_pixels` picks its gather-join strategy with it
+    (see the strategy comment there)."""
     return (
         info["width"] * info["height"] * info["n_bands"]
         * np.dtype(info["dtype"]).itemsize * max(1, int(n_steps))
@@ -1542,10 +1539,10 @@ def _merc_fs_exprs(info: dict, z: int, block_size: int) -> tuple[str, str]:
     """(fsx, fsy) SQL expression strings in ``gx``/``gy`` for
     geographic (4326) / web-mercator (3857) sources — the closed-form
     inverse map from target pixel center to fractional source sample
-    coordinates. The SINGLE definition shared by the join-path warp
-    (:func:`_resampled_pixels`) and the fused separable index job
-    (:func:`_separable_src_index`), so both evaluate byte-identical
-    expressions in the same engine (r18)."""
+    coordinates. The SINGLE definition shared by the target grid
+    (:func:`_target_grid`) and the separable per-axis vectors
+    (:func:`_separable_src_fs`), so both evaluate byte-identical
+    expressions in the same engine."""
     ox, a, b, oy, c, d = info["transform"]
     det = a * d - b * c
     if det == 0:
@@ -1571,8 +1568,8 @@ def _fsy_rows_interp(info: dict, gy0: int, npy: int, world: float):
     on the driver (piecewise-linear between centers, linear beyond the
     outer centers like the affine path). Returns the float64 ``fsy``
     vector for gy in [gy0, gy0+npy). The SINGLE definition shared by
-    the join path's broadcast rowmap and the fused separable index
-    (r18) — both floor the same doubles."""
+    the join warp's broadcast rowmap and the per-tile kernel's feeders
+    — both floor the same doubles."""
     lc = np.asarray(info["lat_centers"], dtype="f8")  # north → south
     if len(lc) < 2 or not (np.diff(lc) < 0).all():
         raise ValueError("lat_centers must be strictly north→south")
@@ -1595,32 +1592,13 @@ def _fsy_rows_interp(info: dict, gy0: int, npy: int, world: float):
     return fsy_t
 
 
-def _fused_gather_eligible(info: dict, resampling: str, n_steps: int = 1) -> bool:
-    """Whether the import can skip the warp JOIN entirely (r18): for a
-    broadcast-class source on a NORTH-UP affine grid (no rotation
-    terms) in 4326/3857, the source-coordinate map is SEPARABLE —
-    ``fsy`` depends only on ``gy`` and ``fsx`` only on ``gx`` — so two
-    tiny per-axis vectors plus a broadcast of the decoded source
-    replace the per-pixel broadcast hash join AND the per-pixel Python
-    boundary of the aligned assembly (guide §2.4/§8: decide with small
-    rows, move big rows once — here the per-pixel rows stop existing
-    at all). ``near`` gathers the containing cell; ``bilinear``/
-    ``cubic`` (r18 session 4) blend the separable 2×2/4×4 kernel
-    neighborhood in numpy, bit-identically to the join path's SQL
-    blend (see the kernel branch of :func:`_fused_gather_tiles`).
-    Staggered, ragged-row and projected sources keep the join path;
-    Gaussian (irregular-lat) grids qualify because their fsy is
-    already a driver-computed per-row vector."""
+def _is_separable(info: dict) -> bool:
+    """Whether fsx depends on gx alone and fsy on gy alone, with the
+    plain index step: a north-up 4326/3857 affine grid without
+    staggered or ragged rows (Gaussian rows qualify)."""
     ox, a, b, oy, c, d = info["transform"]
-    return (
-        resampling in ("near", "bilinear", "cubic")
-        and gather_is_broadcast(info, n_steps)
-        and b == 0.0
-        and c == 0.0
-        and not info.get("stagger_x")
-        and info.get("row_ni") is None
-        and info["epsg"] in (4326, 3857)
-    )
+    return (b == 0.0 and c == 0.0 and info["epsg"] in (4326, 3857)
+            and not info.get("stagger_x") and info.get("row_ni") is None)
 
 
 def _separable_src_fs(
@@ -1630,15 +1608,12 @@ def _separable_src_fs(
     block_size: int,
     tile_ext: tuple[int, int, int, int],
 ):
-    """(fsx_by_gx, fsy_by_gy) float64 vectors over the target extent —
-    the same fractional source coordinates the join path computes, from
-    the same expressions, evaluated by the same JVM engine (one tiny
-    job over max(npx, npy) rows, so transcendental bit-identity with
-    the join path is by construction, not by numpy-vs-JVM luck).
-    ``lat_centers`` grids take fsy from the identical driver-side
-    interp the join path's rowmap uses. Downstream ``floor``/kernel
-    arithmetic on these doubles is plain IEEE-754 — bit-identical
-    between numpy and the JVM given identical inputs."""
+    """(fsx_by_gx, fsy_by_gy) float64 vectors over the target extent
+    of a separable source (:func:`_is_separable`): the expressions of
+    :func:`_target_grid`, evaluated by the same JVM engine in one tiny
+    job over max(npx, npy) rows, so bit-identity with the join warp
+    holds by construction; ``lat_centers`` grids take the same
+    driver-side fsy interp."""
     tx0, ty0, tx1, ty1 = tile_ext
     bs = block_size
     gx0, gy0 = tx0 * bs, ty0 * bs
@@ -1664,23 +1639,77 @@ def _separable_src_fs(
     return fsx, fsy
 
 
-def _separable_src_index(
+def _target_grid(
     spark: SparkSession,
     info: dict,
     z: int,
     block_size: int,
     tile_ext: tuple[int, int, int, int],
 ):
-    """(sxn_by_gx, syn_by_gy) int64 vectors over the target extent —
-    ``floor`` of the JVM-computed fractional coordinates
-    (:func:`_separable_src_fs`); ``floor`` of a double is exact in
-    both engines, so these are the same containing-cell indices the
-    join path's ``CAST(floor(fsx) AS BIGINT)`` produces."""
-    fsx, fsy = _separable_src_fs(spark, info, z, block_size, tile_ext)
-    return (
-        np.floor(fsx).astype("int64"),
-        np.floor(fsy).astype("int64"),
+    """The covering target pixel grid as ``(tgt, fsy_rows)``: ``tgt``
+    holds ``(_tid, gx, gy, fsx, fsy)``, each pixel's fractional source
+    coordinates (sample i's center sits at i + 0.5) — closed form for
+    4326/3857 (:func:`_merc_fs_exprs`), mercator → lon/lat → Snyder
+    forward (:func:`_forward_steps`) → inverse affine otherwise.
+    Block-major, whole tiles per partition: one ``spark.range`` row per
+    tile, exploded to its ``bs²`` pixels in row-major order. For
+    irregular row latitudes (``lat_centers``) ``fsy_rows``, the
+    per-target-row fsy over gy in [gy0, gy0+npy), replaces ``fsy``;
+    None otherwise. Shared by the join warp and the per-tile kernel's
+    per-pixel feeder, so both see the same doubles."""
+    ox, a, b, oy, c, d = info["transform"]
+    det = a * d - b * c
+    if det == 0:
+        raise ValueError("singular geotransform")
+    tx0, ty0, tx1, ty1 = tile_ext
+    bs = block_size
+    gx0, gy0 = tx0 * bs, ty0 * bs
+    ntx = tx1 - tx0 + 1
+    n_tiles = ntx * (ty1 - ty0 + 1)
+    world = float((1 << z) * bs)
+
+    n_part = max(1, min(spark.sparkContext.defaultParallelism, n_tiles))
+    tgt = (
+        spark.range(0, n_tiles, 1, n_part)
+        .selectExpr(
+            "id AS _tid", f"explode(sequence(0, {bs * bs - 1})) AS _o"
+        )
+        .selectExpr(
+            "_tid",
+            f"{gx0} + (_tid % {ntx}) * {bs} + _o % {bs} AS gx",
+            f"{gy0} + (_tid DIV {ntx}) * {bs} + _o DIV {bs} AS gy",
+        )
     )
+    if info["epsg"] in (4326, 3857):
+        fsx_e, fsy_e = _merc_fs_exprs(info, z, block_size)
+        tgt = tgt.selectExpr(
+            "_tid", "gx", "gy", f"{fsx_e} AS fsx", f"{fsy_e} AS fsy"
+        )
+    else:
+        # target pixel center -> web-mercator meters
+        cmx = f"((gx + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT} - {_ORIGIN_SHIFT})"
+        cmy = f"({_ORIGIN_SHIFT} - (gy + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT})"
+        # projected source: mercator -> lon/lat -> Snyder forward
+        tgt = tgt.withColumn(
+            "_lon", F.expr(f"{cmx} / {_ORIGIN_SHIFT} * 180.0D")
+        ).withColumn(
+            "_lat",
+            F.expr(f"degrees(2.0D * atan(exp({cmy} / {_EARTH_R})) - {math.pi / 2.0})"),
+        )
+        fsteps, x_e, y_e = _forward_steps(info)
+        for name, expr in fsteps:
+            tgt = tgt.withColumn(name, F.expr(expr))
+        u, v = f"({x_e} - {ox})", f"({y_e} - {oy})"
+        tgt = tgt.selectExpr(
+            "_tid",
+            "gx",
+            "gy",
+            f"({u} * {d} - {b} * {v}) / {det} AS fsx",
+            f"({-c} * {u} + {a} * {v}) / {det} AS fsy",
+        )
+    if info.get("lat_centers") is None:
+        return tgt, None
+    return tgt, _fsy_rows_interp(info, gy0, (ty1 - ty0 + 1) * bs, world)
 
 
 def _kernel_np(d: np.ndarray, resampling: str) -> np.ndarray:
@@ -1734,87 +1763,187 @@ def _round_half_up_spark(x: np.ndarray) -> np.ndarray:
     return out
 
 
-def _fused_gather_tiles(
-    spark: SparkSession,
-    px: DataFrame,
-    info: dict,
-    z: int,
-    block_size: int,
-    tile_ext: tuple[int, int, int, int],
-    metadata: dict,
-    compression: str | None,
-    extra_key: str | None = None,
+_WARP_KERNELS = ("near", "bilinear", "cubic")
+
+
+def _check_warp_resampling(info: dict, resampling: str) -> None:
+    """Plan-time gate shared by both size-class routes."""
+    if resampling not in _WARP_KERNELS:
+        if info.get("row_ni") is not None:
+            raise NotImplementedError(
+                "reduced (ragged-row) grids resample nearest, bilinear, "
+                "or cubic only"
+            )
+        raise ValueError(f"unknown resampling {resampling!r}")
+    if resampling != "near" and info.get("stagger_x"):
+        raise NotImplementedError(
+            "staggered-grid source with kernel resampling "
+            "(nearest only; re-grid first)"
+        )
+
+
+def _floor_long(x: np.ndarray) -> np.ndarray:
+    """Spark's ``CAST(floor(x) AS BIGINT)``: Java's ``(long)`` narrowing
+    maps NaN to 0 and saturates (clipped at ±2^62 here — outside every
+    grid either way)."""
+    f = np.floor(x)
+    return np.where(
+        np.isnan(f), 0.0, np.clip(f, -(2.0 ** 62), 2.0 ** 62)
+    ).astype(np.int64)
+
+
+def _row_len(row_ni, syn: np.ndarray) -> np.ndarray:
+    """Ragged-row width of source row ``syn`` (0 outside the grid)."""
+    ok = (syn >= 0) & (syn < len(row_ni))
+    return np.where(ok, np.asarray(row_ni)[np.clip(syn, 0, len(row_ni) - 1)], 0)
+
+
+def _tile_taps(fsx, fsy, src: dict, resampling: str) -> list[tuple]:
+    """The index step of :func:`build_tile`: source taps ``(rows, cols,
+    in_bounds, weight)`` (weight None for ``near``) in the join warp's
+    contribution order — each rule the op-for-op numpy twin of its SQL
+    in :func:`_resampled_pixels`."""
+    h, w, row_ni = src["height"], src["width"], src["row_ni"]
+    if row_ni is not None:
+        # ragged rows (reduced grids): each row indexes its own x
+        # spacing — 360/rn on global circles, span/(rn−1) on
+        # endpoint-inclusive regional rows
+        lon = fsx * src["transform"][1] + src["transform"][0]
+        lf, span = src["lon_first"], src["lon_span"]
+
+        def row_u(rn):
+            if span is not None:
+                return (lon - lf) * (rn - 1) / span
+            return (lon - lf) * rn / 360.0
+
+    if resampling == "near":
+        syn = _floor_long(fsy)
+        oky = (syn >= 0) & (syn < h)
+        if row_ni is not None:
+            rn = _row_len(row_ni, syn)
+            k = _floor_long(row_u(rn) + 0.5)
+            sxn = np.mod(k, np.maximum(rn, 1)) if src["lon_global"] else k
+            return [(syn, sxn, oky & (rn > 0) & (sxn >= 0) & (sxn < rn), None)]
+        st = src["stagger_x"]  # staggered rows: parity picks the offset
+        off = np.where(np.mod(syn, 2) == 0, float(st[0]), float(st[1])) if st else 0.0
+        sxn = _floor_long(fsx - off)
+        return [(syn, sxn, oky & (sxn >= 0) & (sxn < w), None)]
+
+    ks = range(*((0, 2) if resampling == "bilinear" else (-1, 3)))
+    taps = []
+    if row_ni is not None:
+        # (ky, kx) order; the x weight sees the UNWRAPPED neighbor
+        wrap = span is None and src["lon_global"]
+        for ky in ks:
+            syn = _floor_long(fsy - 0.5) + ky
+            wy = _kernel_np(fsy - (syn + 0.5), resampling)
+            rn = _row_len(row_ni, syn)
+            u = row_u(rn)
+            k0 = _floor_long(u)
+            for kx in ks:
+                k = k0 + kx
+                sxn = np.mod(k, np.maximum(rn, 1)) if wrap else k
+                ok = (syn >= 0) & (syn < h) & (sxn >= 0) & (sxn < rn)
+                taps.append((syn, sxn, ok, wy * _kernel_np(u - k, resampling)))
+        return taps
+    ibx, iby = _floor_long(fsx - 0.5), _floor_long(fsy - 0.5)
+    ys = [(iby + ky, _kernel_np(fsy - (iby + ky + 0.5), resampling))
+          for ky in ks]
+    for kx in ks:  # (kx, ky) order
+        sxn = ibx + kx
+        wx = _kernel_np(fsx - (sxn + 0.5), resampling)
+        for syn, wy in ys:
+            ok = (sxn >= 0) & (sxn < w) & (syn >= 0) & (syn < h)
+            taps.append((syn, sxn, ok, wx * wy))
+    return taps
+
+
+def build_tile(
+    fsx: np.ndarray,
+    fsy: np.ndarray,
+    src: dict,
+    resampling: str,
     dense: bool = False,
-    resampling: str = "near",
-) -> DataFrame:
-    """Join-free nearest-warp import for the separable broadcast class
-    (:func:`_fused_gather_eligible`): collect the decoded source grid
-    once (the same rows the join path's BroadcastExchange would pull to
-    the driver — as packed ndarrays instead of a per-row hash
-    relation), broadcast it with the two separable index vectors, and
-    build each output tile in ONE numpy gather + encode inside a
-    ``mapInPandas`` over one row per tile. The per-target-pixel rows of
-    the join path (tile_count × block_size² × steps through a hash
-    probe and the Arrow boundary) never exist. Output is byte-identical
-    to ``_resampled_pixels(near) → from_pixel_table(aligned=True)``
-    (+ the dense nodata fill when ``dense``): same JVM-floored indices,
-    same verbatim value copies, same fill/astype/encode semantics —
-    pinned by test_fused_gather_matches_join_path.
+    compression: str | None = None,
+) -> list[tuple[int, list[bytes]]]:
+    """One output tile from its ``bs×bs`` fractional source coordinate
+    planes ``fsx``/``fsy`` (broadcast views of per-axis vectors work as
+    well) — the pure-numpy warp kernel of every broadcast-class import.
+    ``src`` is the decoded source (:func:`_source_grids`). Returns
+    ``[(step, [blob per band]), ...]``: like the join warp, a (tile,
+    step) row exists only when a pixel has a value; ``dense`` emits the
+    all-fill tile otherwise (the dense fill's literal).
 
-    ``resampling='bilinear'``/``'cubic'`` (r18 session 4): the kernel
-    neighborhood is separable too — per-axis neighbor-index and
-    kernel-weight vectors (``floor(fs - 0.5) + k`` and the
-    :func:`_kernel_np` weights, every op IEEE float64 on the
-    JVM-computed ``fs`` doubles, so bit-identical to the join path's
-    SQL). Each tile blends its 2×2/4×4 gathered planes with the SAME
-    accumulation semantics as the SQL ``SUM(CASE WHEN valid …)``:
-    contributions in the join path's (kx, ky) explode order,
-    nodata/out-of-bounds terms SKIPPED (not added as zero — the
-    running sum's bits, including signed zeros, match exactly),
-    ``num/den`` guarded by ``den <> 0``, and Spark's HALF_UP
-    ``round()`` replicated by :func:`_round_half_up_spark` for integer
-    bands — pinned by the bilinear/cubic cases of
-    test_fused_gather.py."""
-    from raquet_spark.core.metadata import parse_nodata
-    from raquet_spark.functions import quadbin as qb
+    Layers: the index step (:func:`_tile_taps`); the gather — ``near``
+    copies the containing cell, ``bilinear``/``cubic`` blend with the
+    SQL ``SUM(CASE WHEN valid …)`` semantics: explode order, nodata/
+    absent/out-of-bounds terms skipped, sums seeded with +0.0 like
+    Spark's ``SUM`` (``0.0 + first term``: a lone −0.0 sums to +0.0),
+    ``num/den`` where ``den <> 0``; then, shared, the nodata fill,
+    Spark's HALF_UP ``round()`` for integer bands and the encode."""
     from raquet_spark.functions.bands import DTYPES, encode_block
-    from raquet_spark.session import ensure_package_shipped
 
-    ensure_package_shipped(spark)
-    tx0, ty0, tx1, ty1 = tile_ext
-    bs = block_size
+    taps = _tile_taps(fsx, fsy, src, resampling)
+    h, w, have = src["height"], src["width"], src["have"]
+    shape = np.broadcast_shapes(np.shape(fsx), np.shape(fsy))
+    idx = [(np.clip(r, 0, h - 1), np.clip(c, 0, w - 1)) for r, c, _, _ in taps]
+    out = []
+    for si in range(src["n_steps"]):
+        oks = [ok if have is None else ok & have[si][ix]
+               for (_, _, ok, _), ix in zip(taps, idx)]
+        tiles, has_row = [], np.zeros(shape, dtype=bool)
+        for name, btype, nodata in src["bands"]:
+            g = src["grids"][name][si]
+            if resampling == "near":
+                valid = oks[0]
+                vals = g[idx[0]][valid]
+            else:
+                num, den = np.zeros(shape), np.zeros(shape)
+                for ix, ok, (_, _, _, wt) in zip(idx, oks, taps):
+                    v = g[ix]
+                    if nodata is not None:  # NaN nodata matches NaN
+                        ok = ok & ~(np.isnan(v) if nodata != nodata
+                                    else v == float(nodata))
+                    num = np.where(ok, num + wt * v, num)
+                    den = np.where(ok, den + wt, den)
+                valid = den != 0.0
+                vals = num[valid] / den[valid]
+                if src["int_out"]:
+                    vals = _round_half_up_spark(vals)
+            tile = np.full(shape, 0 if nodata is None else nodata,
+                           dtype=DTYPES[btype])
+            tile[valid] = vals.astype(DTYPES[btype])
+            tiles.append(tile)
+            has_row |= valid
+        if dense or has_row.any():
+            out.append((si, [
+                encode_block(t.reshape(-1), btype, compression)
+                for t, (_, btype, _) in zip(tiles, src["bands"])
+            ]))
+    return out
+
+
+def _source_grids(
+    pdf: pd.DataFrame,
+    info: dict,
+    meta: dict,
+    resampling: str,
+    extra_key: str | None = None,
+) -> dict:
+    """The pixel table ``pdf`` (sx, sy, [extra_key], band...) as
+    :func:`build_tile`'s input: a (steps, height, width) grid per band
+    — the storage dtype for ``near`` (the assembly's own cast), the
+    table's values for the kernels' blend — a presence mask ``have``
+    when the table omits cells (GRIB bitmap-missing points), and the
+    geometry the index step reads."""
+    from raquet_spark.core.metadata import parse_nodata
+    from raquet_spark.functions.bands import DTYPES
+
     h, w = info["height"], info["width"]
     bands = [
         (b["name"], b["type"], parse_nodata(b.get("nodata")))
-        for b in metadata["bands"]
+        for b in meta["bands"]
     ]
-    kernel = resampling in ("bilinear", "cubic")
-    if kernel:
-        fsx, fsy = _separable_src_fs(spark, info, z, bs, tile_ext)
-        klo, khi = (0, 1) if resampling == "bilinear" else (-1, 2)
-        # per-axis neighbor indices + kernel weights, precomputed for
-        # the whole extent exactly as the join path's SQL evaluates
-        # them: ib = floor(fs - 0.5); neighbor k is ib + k with weight
-        # kernel(fs - (neighbor + 0.5))
-        ibx, iby = np.floor(fsx - 0.5), np.floor(fsy - 0.5)
-        xk = [ibx + k for k in range(klo, khi + 1)]
-        yk = [iby + k for k in range(klo, khi + 1)]
-        kern = (
-            [s.astype("int64") for s in xk],
-            [s.astype("int64") for s in yk],
-            [_kernel_np(fsx - (s + 0.5), resampling) for s in xk],
-            [_kernel_np(fsy - (s + 0.5), resampling) for s in yk],
-        )
-        int_out = np.dtype(info["dtype"]).kind in "iu"
-        sxn = syn = None
-    else:
-        kern, int_out = None, False
-        sxn, syn = _separable_src_index(spark, info, z, bs, tile_ext)
-
-    # `px` may arrive pre-collected (a driver-local decode, e.g. the
-    # classic-NetCDF fast path) — this function's next step is the
-    # driver collect either way
-    pdf = px if isinstance(px, pd.DataFrame) else px.toPandas()
     sx = pdf["sx"].to_numpy(dtype="int64")
     sy = pdf["sy"].to_numpy(dtype="int64")
     if extra_key is not None:
@@ -1822,169 +1951,218 @@ def _fused_gather_tiles(
         ti = np.searchsorted(tvals, pdf[extra_key].to_numpy())
     else:
         tvals, ti = None, 0
-    grids: dict[str, np.ndarray] = {}
-    for name, btype, nodata in bands:
-        fill = 0 if nodata is None else nodata
+    nt = len(tvals) if tvals is not None else 1
+    grids = {}
+    for name, btype, _ in bands:
         vals = pdf[name].to_numpy()
-        if kernel:
-            # the kernel blend consumes the PX-TABLE values (the join
-            # path's SUM sees the pixel-table column cast to DOUBLE,
-            # BEFORE any storage narrowing) — keep the native dtype so
-            # the later astype(float64) is the same exact cast
-            g = np.full(
-                (len(tvals) if tvals is not None else 1, h, w),
-                fill,
-                dtype=vals.dtype,
-            )
-            g[ti, sy, sx] = vals
-        else:
-            # storage dtype now = the same elementwise astype the
-            # assembly applies after the join (float64→float32 is one
-            # IEEE round-to-nearest either place); absent source cells
-            # (e.g. GRIB bitmap-omitted points) stay at the fill value
-            # — exactly what a no-match target pixel gets from the
-            # join path
-            g = np.full(
-                (len(tvals) if tvals is not None else 1, h, w),
-                fill,
-                dtype=DTYPES[btype],
-            )
-            g[ti, sy, sx] = vals.astype(DTYPES[btype])
-        grids[name] = g
-    bvar = spark.sparkContext.broadcast((sxn, syn, tvals, grids, kern))
+        dtype = DTYPES[btype] if resampling == "near" else vals.dtype
+        grids[name] = np.zeros((nt, h, w), dtype=dtype)
+        grids[name][ti, sy, sx] = vals.astype(dtype)
+    have = None
+    if len(pdf) < nt * h * w:
+        have = np.zeros((nt, h, w), dtype=bool)
+        have[ti, sy, sx] = True
+    return {
+        "grids": grids, "have": have, "tvals": tvals, "n_steps": nt,
+        "bands": bands, "int_out": np.dtype(info["dtype"]).kind in "iu",
+        "height": h, "width": w,
+        **{k: info.get(k) for k in ("transform", "stagger_x", "row_ni",
+                                    "lon_first", "lon_span", "lon_global")},
+    }
 
+
+def _broadcast_tiles(
+    spark: SparkSession,
+    pdf: pd.DataFrame,
+    info: dict,
+    meta: dict,
+    tile_ext: tuple[int, int, int, int],
+    resampling: str,
+    extra_key: str | None = None,
+    dense: bool = False,
+) -> DataFrame:
+    """The broadcast-class import: the decoded source (the rows a
+    broadcast join would pull to the driver, as packed ndarrays) is
+    broadcast and :func:`build_tile` builds every output tile inside
+    one ``mapInPandas`` — no join, no exchange. Separable sources
+    (:func:`_is_separable`) feed it per-tile slices of per-axis
+    vectors (:func:`_separable_src_fs`) over one ``spark.range`` row
+    per tile; every other source feeds it the JVM-computed per-pixel
+    planes of :func:`_target_grid`, streamed whole tiles at a time."""
+    from raquet_spark.functions import quadbin as qb
+    from raquet_spark.session import ensure_package_shipped
+
+    ensure_package_shipped(spark)
+    z, bs = meta["tiling"]["max_zoom"], meta["tiling"]["block_width"]
+    compression = meta["compression"]
+    tx0, ty0, tx1, ty1 = tile_ext
     ntx = tx1 - tx0 + 1
     n_tiles = ntx * (ty1 - ty0 + 1)
-    # ~8 tiles per task floor: a per-tile gather+encode is sub-ms, so
-    # one task per tile at high core counts is pure scheduling overhead
-    # (measured as a mild c8-faster-than-c32 floor effect); at real
-    # scale n_tiles/8 >> cores and the width is the full parallelism
-    n_part = max(
-        1,
-        min(spark.sparkContext.defaultParallelism, (n_tiles + 7) // 8),
-    )
-    schema = "block bigint" + (
-        f", {extra_key} double" if extra_key is not None else ""
-    ) + "".join(f", {name} binary" for name, _, _ in bands)
+    src = _source_grids(pdf, info, meta, resampling, extra_key)
+    keys = ["block"] + ([extra_key] if extra_key is not None else [])
+    names = [name for name, _, _ in src["bands"]]
+    schema = ", ".join([f"{k} {'bigint' if k == 'block' else 'double'}"
+                        for k in keys] + [f"{n} binary" for n in names])
 
-    def build(batches):
-        sxn_b, syn_b, tvals_b, grids_b, kern_b = bvar.value
-        nt = len(tvals_b) if tvals_b is not None else 1
-        for task_pdf in batches:
-            out: dict[str, list] = {"block": []}
+    def emit(out: dict, tid: int, fsx, fsy, src_b: dict) -> None:
+        block = qb.py_tile_to_cell(tx0 + tid % ntx, ty0 + tid // ntx, z)
+        for si, blobs in build_tile(
+            fsx, fsy, src_b, resampling, dense, compression
+        ):
+            out["block"].append(block)
             if extra_key is not None:
-                out[extra_key] = []
-            for name, _, _ in bands:
-                out[name] = []
-            for tid in task_pdf["id"].tolist():
-                tx = tx0 + tid % ntx
-                ty = ty0 + tid // ntx
-                x0 = (tx - tx0) * bs
-                y0 = (ty - ty0) * bs
-                if kern_b is not None:
-                    # kernel blend branch — the numpy twin of the join
-                    # path's SUM(CASE WHEN valid THEN w*v)/SUM(w) with
-                    # contributions in the (kx, ky) explode order and
-                    # invalid terms SKIPPED, never added as zero
-                    sxk_b, syk_b, wxk_b, wyk_b = kern_b
-                    cxs = [s[x0:x0 + bs] for s in sxk_b]
-                    rys = [s[y0:y0 + bs] for s in syk_b]
-                    wxs = [v[x0:x0 + bs] for v in wxk_b]
-                    wys = [v[y0:y0 + bs] for v in wyk_b]
-                    okx = [(s >= 0) & (s < w) for s in cxs]
-                    oky = [(s >= 0) & (s < h) for s in rys]
-                    ccx = [np.clip(s, 0, w - 1) for s in cxs]
-                    ccy = [np.clip(s, 0, h - 1) for s in rys]
-                    block = qb.py_tile_to_cell(tx, ty, z)
-                    for si in range(nt):
-                        blobs: dict[str, bytes] = {}
-                        any_valid = False
-                        for name, btype, nodata in bands:
-                            fill = 0 if nodata is None else nodata
-                            gband = grids_b[name][si]
-                            num = np.zeros((bs, bs))
-                            den = np.zeros((bs, bs))
-                            started = np.zeros((bs, bs), dtype=bool)
-                            for ix in range(len(cxs)):
-                                if not okx[ix].any():
-                                    continue
-                                for iy in range(len(rys)):
-                                    m2 = oky[iy][:, None] & okx[ix][None, :]
-                                    if not m2.any():
-                                        continue
-                                    v = gband[
-                                        ccy[iy][:, None], ccx[ix][None, :]
-                                    ].astype("float64")
-                                    if nodata is not None:
-                                        if nodata != nodata:  # NaN
-                                            m2 = m2 & ~np.isnan(v)
-                                        else:
-                                            m2 = m2 & (v != float(nodata))
-                                    w2 = wys[iy][:, None] * wxs[ix][None, :]
-                                    t = w2 * v
-                                    num = np.where(
-                                        m2,
-                                        np.where(started, num + t, t),
-                                        num,
-                                    )
-                                    den = np.where(
-                                        m2,
-                                        np.where(started, den + w2, w2),
-                                        den,
-                                    )
-                                    started |= m2
-                            okp = started & (den != 0.0)
-                            tile = np.full((bs, bs), fill, dtype=DTYPES[btype])
-                            if okp.any():
-                                any_valid = True
-                                blend = num[okp] / den[okp]
-                                if int_out:
-                                    blend = _round_half_up_spark(blend)
-                                tile[okp] = blend.astype(DTYPES[btype])
-                            blobs[name] = encode_block(
-                                tile.reshape(-1), btype, compression
-                            )
-                        # the join path emits a (tile, step) row only
-                        # when at least one pixel blended non-NULL;
-                        # dense callers get the all-fill tile (the
-                        # anti-join literal's byte-identical twin)
-                        if any_valid or dense:
-                            out["block"].append(block)
-                            if extra_key is not None:
-                                out[extra_key].append(float(tvals_b[si]))
-                            for name, _, _ in bands:
-                                out[name].append(blobs[name])
-                    continue
-                cols = sxn_b[x0:x0 + bs]
-                rows_ = syn_b[y0:y0 + bs]
-                okc = (cols >= 0) & (cols < w)
-                okr = (rows_ >= 0) & (rows_ < h)
-                covered = bool(okr.any() and okc.any())
-                if not covered and not dense:
-                    # the join path emits no row for a tile with zero
-                    # in-bounds pixels; dense callers fill it below
-                    continue
-                block = qb.py_tile_to_cell(tx, ty, z)
-                sel = np.ix_(okr, okc) if covered else None
-                for si in range(nt):
-                    out["block"].append(block)
-                    if extra_key is not None:
-                        out[extra_key].append(float(tvals_b[si]))
-                    for name, btype, nodata in bands:
-                        fill = 0 if nodata is None else nodata
-                        tile = np.full((bs, bs), fill, dtype=DTYPES[btype])
-                        if covered:
-                            tile[sel] = (
-                                grids_b[name][si][rows_[okr]][:, cols[okc]]
-                            )
-                        out[name].append(
-                            encode_block(tile.reshape(-1), btype, compression)
-                        )
-            yield pd.DataFrame(out)
+                out[extra_key].append(float(src_b["tvals"][si]))
+            for name, blob in zip(names, blobs):
+                out[name].append(blob)
 
-    return spark.range(0, n_tiles, 1, n_part).mapInPandas(
-        build, schema=schema
+    if _is_separable(info):
+        fsx, fsy = _separable_src_fs(spark, info, z, bs, tile_ext)
+        bvar = spark.sparkContext.broadcast((fsx, fsy, src))
+        # ~8 tiles per task floor: a per-tile build is ~ms, so one
+        # task per tile at high core counts is pure scheduling overhead
+        n_part = max(
+            1,
+            min(spark.sparkContext.defaultParallelism, (n_tiles + 7) // 8),
+        )
+
+        def build(batches):
+            fsx_b, fsy_b, src_b = bvar.value
+            for task_pdf in batches:
+                out = {k: [] for k in keys + names}
+                for tid in task_pdf["id"].tolist():
+                    x0, y0 = (tid % ntx) * bs, (tid // ntx) * bs
+                    emit(out, tid, fsx_b[None, x0:x0 + bs],
+                         fsy_b[y0:y0 + bs, None], src_b)
+                yield pd.DataFrame(out)
+
+        return spark.range(0, n_tiles, 1, n_part).mapInPandas(
+            build, schema=schema
+        )
+
+    tgt, fsy_rows = _target_grid(spark, info, z, bs, tile_ext)
+    bvar = spark.sparkContext.broadcast((fsy_rows, src))
+    npx = bs * bs
+
+    def build_planes(batches):
+        fsy_rows_b, src_b = bvar.value
+        pending, n_pending = [], 0
+        for part in batches:
+            pending.append(part)
+            n_pending += len(part)
+            if n_pending < npx:
+                continue
+            cat = pd.concat(pending, ignore_index=True)
+            n_full = n_pending // npx * npx
+            tids = cat["_tid"].to_numpy()
+            fx = cat["fsx"].to_numpy(dtype="float64")
+            fy = (cat["fsy"].to_numpy(dtype="float64")
+                  if fsy_rows_b is None else fsy_rows_b)
+            out = {k: [] for k in keys + names}
+            for k in range(0, n_full, npx):
+                tid = int(tids[k])
+                # whole tiles, in order: one range row per tile
+                if tids[k + npx - 1] != tid:
+                    raise ValueError("target grid is not tile-contiguous")
+                if fsy_rows_b is None:
+                    fsy = fy[k:k + npx].reshape(bs, bs)
+                else:
+                    fsy = fy[(tid // ntx) * bs:][:bs, None]
+                emit(out, tid, fx[k:k + npx].reshape(bs, bs), fsy, src_b)
+            pending = [cat.iloc[n_full:]]
+            n_pending -= n_full
+            yield pd.DataFrame(out)
+        if n_pending:
+            raise ValueError("target grid ended mid-tile")
+
+    cols = ["_tid", "fsx"] + (["fsy"] if fsy_rows is None else [])
+    return tgt.select(*cols).mapInPandas(build_planes, schema=schema)
+
+
+def warp_tiles(
+    spark: SparkSession,
+    px: DataFrame,
+    info: dict,
+    meta: dict,
+    tile_ext: tuple[int, int, int, int],
+    resampling: str,
+    extra_key: str | None = None,
+    n_steps: int = 1,
+    dense: bool = False,
+    local_px=None,
+) -> DataFrame:
+    """The ONE import route of the target-driven resamplings
+    (``near``/``bilinear``/``cubic``, GDAL's inverse-mapping warp) for
+    the GeoTIFF, NetCDF and GRIB importers, chosen by the source size
+    class alone (:func:`gather_is_broadcast`):
+
+    * ≤ ~100 MB: :func:`_broadcast_tiles` — collect the decoded source
+      once, build each tile with :func:`build_tile`, map-only;
+    * larger: :func:`_resampled_pixels` (shuffled hash gather join) →
+      the grouped tile assembly (:func:`_pixel_tiles`).
+
+    ``px``: the (sx, sy, [extra_key], band...) pixel table, one grid
+    per step; ``local_px`` optionally decodes it on the driver for the
+    broadcast class; ``dense`` adds the extent's all-nodata tiles."""
+    _check_warp_resampling(info, resampling)
+    if gather_is_broadcast(info, n_steps):
+        pdf = local_px() if local_px is not None else px.toPandas()
+        return _broadcast_tiles(
+            spark, pdf, info, meta, tile_ext, resampling, extra_key, dense
+        )
+    t = meta["tiling"]
+    pixels = _resampled_pixels(
+        spark, px, info, t["max_zoom"], t["block_width"], resampling,
+        tile_ext, extra_cols=(extra_key,) if extra_key else (),
+        n_steps=n_steps,
     )
+    return _pixel_tiles(spark, pixels, meta, tile_ext, extra_key, dense)
+
+
+def _pixel_tiles(
+    spark: SparkSession,
+    pixels: DataFrame,
+    meta: dict,
+    tile_ext: tuple[int, int, int, int],
+    extra_key: str | None = None,
+    dense: bool = False,
+) -> DataFrame:
+    """Warped (gx, gy, [extra_key], band...) pixels → tile rows via
+    :func:`operators.tiling.from_pixel_table`; ``dense`` adds the
+    covering extent's missing tiles (the reference warps the full
+    covering grid) as one driver-encoded nodata literal per band on
+    the anti-joined missing cells."""
+    from raquet_spark.core.metadata import parse_nodata
+    from raquet_spark.functions import quadbin as qbf
+    from raquet_spark.functions.bands import DTYPES, encode_block
+    from raquet_spark.operators.tiling import from_pixel_table
+
+    tiles = from_pixel_table(
+        pixels, meta, compression=meta["compression"],
+        extra_keys=((extra_key, "double"),) if extra_key else (),
+    )
+    if not dense:
+        return tiles
+    z, bs = meta["tiling"]["max_zoom"], meta["tiling"]["block_width"]
+    tx0, ty0, tx1, ty1 = tile_ext
+    cell = qbf.tile_to_cell_sql("x", "y", z, "spark")
+    full = spark.sql(
+        f"""
+        SELECT {cell} AS block
+        FROM (SELECT explode(sequence({tx0}, {tx1})) AS x)
+        CROSS JOIN (SELECT explode(sequence({ty0}, {ty1})) AS y)
+        """
+    )
+    missing = full.join(tiles.select("block"), "block", "left_anti")
+    fill_cols = []
+    for b in meta["bands"]:
+        nodata = parse_nodata(b.get("nodata"))
+        blob = encode_block(
+            np.full(bs * bs, 0 if nodata is None else nodata,
+                    dtype=DTYPES[b["type"]]),
+            b["type"], meta["compression"],
+        )
+        fill_cols.append(F.lit(bytearray(blob)).alias(b["name"]))
+    return tiles.unionByName(missing.select("block", *fill_cols))
 
 
 def _resampled_pixels(
@@ -1998,120 +2176,35 @@ def _resampled_pixels(
     extra_cols: tuple[str, ...] = (),
     n_steps: int = 1,
 ) -> DataFrame:
-    """Target-driven warp for ``bilinear``/``cubic`` import resampling
-    (reference: --resampling, /root/reference/raquet/cli.py:457).
-
-    The covering target pixel grid is generated distributed
-    (``spark.range`` over the tile-aligned extent), each target center
-    is inverse-mapped to fractional SOURCE sample coordinates in
-    closed form, the 2×2 (bilinear) / 4×4 (cubic) neighborhood indices
-    are exploded, and one equi-join on (sx, sy) gathers the samples —
-    candidate volume is 4×/16× the OUTPUT size, never source×target.
-    Nodata samples drop out of the blend and the kernel renormalizes
-    (GDAL's masked-resampling behavior). Projected sources go through
-    the closed-form Snyder FORWARD projections (:func:`_forward_steps`),
-    so every supported CRS warps target-driven.
-
-    The target grid is generated BLOCK-MAJOR with whole tiles per
-    partition (r17): one ``spark.range`` row per output tile, exploded
-    to its ``bs²`` pixels, so with a broadcast gather join (the
-    ≤100 MB source class — most single-raster conversions) the
-    ``near`` path's output arrives at ``from_pixel_table`` already
-    tile-contiguous within partitions and the tile assembly needs NO
-    exchange at all (``aligned=True`` — guide §8 "co-locate instead
-    of join"). The pixel SET is unchanged — only generation order —
-    and the kernel paths' blend sums are order-stable because every
-    contribution of a target pixel is exploded from that pixel's own
-    row (adjacent, (ky, kx)-ordered, single partition)."""
-    ox, a, b, oy, c, d = info["transform"]
-    det = a * d - b * c
-    if det == 0:
-        raise ValueError("singular geotransform")
-    tx0, ty0, tx1, ty1 = tile_ext
-    bs = block_size
-    gx0, gy0 = tx0 * bs, ty0 * bs
-    ntx = tx1 - tx0 + 1
-    n_tiles = ntx * (ty1 - ty0 + 1)
-    npx, npy = ntx * bs, (ty1 - ty0 + 1) * bs
-    world = float((1 << z) * bs)
-
-    n_part = max(1, min(spark.sparkContext.defaultParallelism, n_tiles))
-    tgt = (
-        spark.range(0, n_tiles, 1, n_part)
-        .selectExpr(
-            "id AS _tid", f"explode(sequence(0, {bs * bs - 1})) AS _o"
-        )
-        .selectExpr(
-            f"{gx0} + (_tid % {ntx}) * {bs} + _o % {bs} AS gx",
-            f"{gy0} + (_tid DIV {ntx}) * {bs} + _o DIV {bs} AS gy",
-        )
-    )
-    if info["epsg"] in (4326, 3857):
-        # target pixel center -> fractional source sample coords, as
-        # one closed form shared with the fused separable index
-        # (_merc_fs_exprs keeps both paths byte-identical, r18)
-        fsx_e, fsy_e = _merc_fs_exprs(info, z, block_size)
-        tgt = tgt.selectExpr("gx", "gy", f"{fsx_e} AS fsx", f"{fsy_e} AS fsy")
-    else:
-        # target pixel center -> web-mercator meters
-        cmx = f"((gx + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT} - {_ORIGIN_SHIFT})"
-        cmy = f"({_ORIGIN_SHIFT} - (gy + 0.5D) / {world} * {2.0 * _ORIGIN_SHIFT})"
-        # projected source: mercator -> lon/lat -> Snyder forward
-        tgt = tgt.withColumn(
-            "_lon", F.expr(f"{cmx} / {_ORIGIN_SHIFT} * 180.0D")
-        ).withColumn(
-            "_lat",
-            F.expr(f"degrees(2.0D * atan(exp({cmy} / {_EARTH_R})) - {math.pi / 2.0})"),
-        )
-        fsteps, x_e, y_e = _forward_steps(info)
-        for name, expr in fsteps:
-            tgt = tgt.withColumn(name, F.expr(expr))
-        mox, moy = x_e, y_e
-        # fractional source sample coords (sample i's center sits at i + 0.5)
-        u, v = f"({mox} - {ox})", f"({moy} - {oy})"
-        tgt = tgt.selectExpr(
-            "gx",
-            "gy",
-            f"({u} * {d} - {b} * {v}) / {det} AS fsx",
-            f"({-c} * {u} + {a} * {v}) / {det} AS fsy",
-        )
-    lat_centers = info.get("lat_centers")
-    if lat_centers is not None:
-        # IRREGULAR row latitudes (Gaussian grids, GRIB 3.40): row →
-        # lat is not affine, so the per-target-ROW fractional source
-        # row is computed on the driver (row center i sits at fsy =
-        # i + 0.5, piecewise-linear between centers, linear beyond the
-        # outer centers like the affine path — _fsy_rows_interp, shared
-        # with the fused separable index) and broadcast-joined on
-        # gy — npy entries, O(thousands); everything else (the x
-        # affine, the gather joins, the kernels) is untouched.
-        gys = np.arange(gy0, gy0 + npy, dtype="f8")
-        fsy_t = _fsy_rows_interp(info, gy0, npy, world)
+    """Target-driven warp to a (gx, gy, [extra_cols], band...) pixel
+    table (the reference's --resampling, raquet/cli.py:457)
+    — the route past the broadcast class, and the reference the
+    per-tile kernel (:func:`build_tile`) is pinned byte-identical to.
+    Each target pixel of :func:`_target_grid` carries its fractional
+    source coordinates; ``near`` joins the containing cell,
+    ``bilinear``/``cubic`` explode the 2×2 / 4×4 neighborhood (4×/16×
+    the OUTPUT, never source×target), gather with one (sx, sy)
+    equi-join and blend nodata-renormalized in one groupBy(target
+    pixel) — order-stable, as each pixel's contributions are exploded
+    from its own row."""
+    _check_warp_resampling(info, resampling)
+    ox, a = info["transform"][:2]
+    tgt, fsy_rows = _target_grid(spark, info, z, block_size, tile_ext)
+    if fsy_rows is not None:
+        # IRREGULAR row latitudes (Gaussian grids, GRIB 3.40): the
+        # driver-computed per-target-ROW fsy is broadcast-joined on gy
+        # — npy entries, O(thousands); everything else (the x affine,
+        # the gather joins, the kernels) is untouched
+        gy0 = tile_ext[1] * block_size
+        gys = np.arange(gy0, gy0 + len(fsy_rows))
         row_ni = info.get("row_ni")  # reduced grids: ragged row widths
-        if row_ni is not None:
-            if resampling not in ("near", "bilinear", "cubic"):
-                raise NotImplementedError(
-                    "reduced (ragged-row) grids resample nearest, "
-                    "bilinear, or cubic only"
-                )
-            syn_t = np.floor(fsy_t).astype("i8")
-            rn_t = np.where(
-                (syn_t >= 0) & (syn_t < len(row_ni)),
-                np.asarray(row_ni, dtype="i8")[
-                    np.clip(syn_t, 0, len(row_ni) - 1)
-                ],
-                0,
-            )
-            rowmap = spark.createDataFrame(
-                [(int(g), float(f), int(rn))
-                 for g, f, rn in zip(gys, fsy_t, rn_t)],
-                "gy bigint, _fsy_row double, _rn bigint",
-            )
-        else:
-            rowmap = spark.createDataFrame(
-                [(int(g), float(f)) for g, f in zip(gys, fsy_t)],
-                "gy bigint, _fsy_row double",
-            )
+        rn_t = (np.zeros(len(gys), dtype="i8") if row_ni is None else
+                _row_len(row_ni, np.floor(fsy_rows).astype("i8")))
+        rowmap = spark.createDataFrame(
+            [(int(g), float(f), int(rn))
+             for g, f, rn in zip(gys, fsy_rows, rn_t)],
+            "gy bigint, _fsy_row double, _rn bigint",
+        )
         tgt = (
             tgt.drop("fsy")
             .join(F.broadcast(rowmap), "gy")
@@ -2235,11 +2328,6 @@ def _resampled_pixels(
             "gx", "gy", *extra_cols, *band_cols
         )
 
-    if info.get("stagger_x"):
-        raise NotImplementedError(
-            "staggered-grid source with kernel resampling "
-            "(nearest only; re-grid first)"
-        )
     if info.get("row_ni") is not None:
         # ragged-row (reduced-grid) kernel resampling: the 2 (bilinear)
         # or 4 (cubic) candidate rows come from the piecewise fsy, and
@@ -2371,10 +2459,12 @@ def geotiff_to_raquet(
     resampling: str = "near",
 ) -> tuple[DataFrame, dict]:
     """Read a real GeoTIFF and produce (tiles, metadata) on the
-    web-mercator RaQuet grid — raster2raquet's convert path, one
-    relational plan: distributed segment decode → forward-map warp
-    (one shuffle keyed by target pixel) → tile assembly (one shuffle
-    keyed by block) → optional per-tile stats."""
+    web-mercator RaQuet grid — raster2raquet's convert path: segment
+    decode → warp + tile assembly → optional per-tile stats.
+    ``near``/``bilinear``/``cubic`` take :func:`warp_tiles`; the
+    reducing kernels forward-map every source sample and reduce per
+    target pixel (:func:`aggregate_warp`) before the grouped
+    assembly."""
     info = read_tiff_structure(path)
     z = zoom if zoom is not None else _pick_zoom(info, block_size, zoom_strategy)
     px = tiff_pixel_table(spark, info)
@@ -2383,100 +2473,71 @@ def geotiff_to_raquet(
     # like the reference's union of mercantile tile bounds); the corner
     # min/max handles bottom-up files (positive y step, e.g. n37_w123's
     # ModelTransformation) and rotated projected corners (AEA)
-    (w, s, e, n), (tx0, ty0, tx1, ty1) = _tile_aligned_bounds(
-        _lonlat_corners(info), z
-    )
-
-    if resampling in ("near", "bilinear", "cubic"):
-        if _fused_gather_eligible(info, resampling):
-            # join-free separable gather (r18): broadcast the decoded
-            # grid + two index vectors, build tiles in one map-only
-            # pass over tile ids — no per-target-pixel rows at all
-            # (see _fused_gather_tiles). Uncompressed chunky sources
-            # decode on the driver (raw byte ranges — the fused path
-            # collects them there anyway); compressed/planar keep the
-            # distributed decode.
-            if info["compression"] == 1 and not (
-                info.get("planar", 1) == 2 and info["n_bands"] > 1
-            ):
-                px = tiff_pixel_table(spark, info, local=True)
-            return _assemble_tiles(
-                spark, None, info, z, block_size, compression, stats,
-                dense, (w, s, e, n), (tx0, ty0, tx1, ty1), fused_src=px,
-                resampling=resampling,
-            )
-        # target-driven inverse mapping: GDAL's warp semantics — every
-        # covered target pixel gets a value (dense even when the target
-        # out-resolves the source). Projected CRS go through the Snyder
-        # FORWARD projections (_forward_steps); geographic/mercator are
-        # direct closed forms.
-        pixels = _resampled_pixels(
-            spark, px, info, z, block_size, resampling, (tx0, ty0, tx1, ty1)
-        )
-        return _assemble_tiles(
-            spark, pixels, info, z, block_size, compression, stats, dense,
-            (w, s, e, n), (tx0, ty0, tx1, ty1),
-            # map-only assembly (r17): broadcast near gather over the
-            # block-major target grid → tile-contiguous pixels, no
-            # tiling exchange (see from_pixel_table)
-            aligned=(resampling == "near" and gather_is_broadcast(info)),
-        )
-    if resampling not in _AGG_KERNELS:
+    bounds, tile_ext = _tile_aligned_bounds(_lonlat_corners(info), z)
+    if resampling not in _WARP_KERNELS + _AGG_KERNELS:
         raise ValueError(f"unknown resampling {resampling!r}")
+    meta = _tiff_metadata(info, z, block_size, compression, stats, bounds,
+                          tile_ext)
 
-    if info["epsg"] == 3857:
-        ox, sxr, rxr, oy, ryr, syr = info["transform"]
-        px = px.withColumn(
-            "_mx", F.expr(f"{ox} + (sx + 0.5) * {sxr} + (sy + 0.5) * {rxr}")
-        ).withColumn(
-            "_my", F.expr(f"{oy} + (sx + 0.5) * {ryr} + (sy + 0.5) * {syr}")
+    if resampling in _WARP_KERNELS:
+        # uncompressed chunky sources decode on the driver when the
+        # route collects them there anyway (raw byte ranges);
+        # compressed/planar keep the distributed decode
+        local = info["compression"] == 1 and not (
+            info.get("planar", 1) == 2 and info["n_bands"] > 1
+        )
+        tiles = warp_tiles(
+            spark, px, info, meta, tile_ext, resampling, dense=dense,
+            local_px=(
+                (lambda: tiff_pixel_table(spark, info, local=True))
+                if local else None
+            ),
         )
     else:
-        steps, lon_e, lat_e = _lonlat_steps(info)
-        for name, expr in steps:
-            px = px.withColumn(name, F.expr(expr))
-        px = (
-            px.withColumn("_lon", F.expr(lon_e))
-            .withColumn("_lat", F.expr(lat_e))
-            .withColumn("_mx", F.expr(f"_lon * {math.pi / 180.0 * _EARTH_R}"))
-            .withColumn(
-                "_my",
-                F.expr(
-                    f"{_EARTH_R} * ln(tan({math.pi / 4.0} + radians(_lat) / 2.0))"
-                ),
+        if info["epsg"] == 3857:
+            ox, sxr, rxr, oy, ryr, syr = info["transform"]
+            px = px.withColumn(
+                "_mx", F.expr(f"{ox} + (sx + 0.5) * {sxr} + (sy + 0.5) * {rxr}")
+            ).withColumn(
+                "_my", F.expr(f"{oy} + (sx + 0.5) * {ryr} + (sy + 0.5) * {syr}")
             )
+        else:
+            steps, lon_e, lat_e = _lonlat_steps(info)
+            for name, expr in steps:
+                px = px.withColumn(name, F.expr(expr))
+            px = (
+                px.withColumn("_lon", F.expr(lon_e))
+                .withColumn("_lat", F.expr(lat_e))
+                .withColumn("_mx", F.expr(f"_lon * {math.pi / 180.0 * _EARTH_R}"))
+                .withColumn(
+                    "_my",
+                    F.expr(
+                        f"{_EARTH_R} * ln(tan({math.pi / 4.0} + radians(_lat) / 2.0))"
+                    ),
+                )
+            )
+        band_cols = [f"band_{b + 1}" for b in range(info["n_bands"])]
+        pixels = aggregate_warp(
+            px, z, block_size, band_cols, resampling, info["nodata"]
         )
-    band_cols = [f"band_{b + 1}" for b in range(info["n_bands"])]
-    pixels = aggregate_warp(
-        px, z, block_size, band_cols, resampling, info["nodata"]
-    )
-    return _assemble_tiles(
-        spark, pixels, info, z, block_size, compression, stats, dense,
-        (w, s, e, n), (tx0, ty0, tx1, ty1),
-    )
+        tiles = _pixel_tiles(spark, pixels, meta, tile_ext, dense=dense)
+    if stats:
+        from raquet_spark.operators.tile_stats import with_tile_stats
+
+        tiles = with_tile_stats(tiles, meta)
+    return tiles, meta
 
 
-def _assemble_tiles(
-    spark: SparkSession,
-    pixels: DataFrame | None,
+def _tiff_metadata(
     info: dict,
     z: int,
     block_size: int,
     compression: str | None,
     stats: bool,
-    dense: bool,
     bounds: tuple[float, float, float, float],
     tile_ext: tuple[int, int, int, int],
-    aligned: bool = False,
-    fused_src: DataFrame | None = None,
-    resampling: str = "near",
-) -> tuple[DataFrame, dict]:
-    """Warped (gx, gy, band_*) pixels → (tiles, metadata): shared tail
-    of the nearest and bilinear/cubic import paths. With ``fused_src``
-    (the SOURCE pixel table, r18) the separable join-free gather builds
-    the tiles directly — including the dense nodata fill, so the
-    anti-join below is skipped too."""
-    w, s, e, n = bounds
+) -> dict:
+    """RaQuet metadata of a GeoTIFF import."""
     tx0, ty0, tx1, ty1 = tile_ext
 
     # GDAL-style color interpretation, as the reference records it:
@@ -2502,9 +2563,9 @@ def _assemble_tiles(
         )
         for b in range(n_bands)
     ]
-    meta = build_metadata(
+    return build_metadata(
         bands=bands,
-        bounds=(w, s, e, n),
+        bounds=bounds,
         # tile-aligned output raster dims, like the reference metadata
         width=(tx1 - tx0 + 1) * block_size,
         height=(ty1 - ty0 + 1) * block_size,
@@ -2515,52 +2576,3 @@ def _assemble_tiles(
         compression=compression,
         tile_statistics=stats,
     )
-    from raquet_spark.operators.tiling import from_pixel_table
-
-    if fused_src is not None:
-        tiles = _fused_gather_tiles(
-            spark, fused_src, info, z, block_size, tile_ext, meta,
-            compression, dense=dense, resampling=resampling,
-        )
-        if stats:
-            from raquet_spark.operators.tile_stats import with_tile_stats
-
-            tiles = with_tile_stats(tiles, meta)
-        return tiles, meta
-    tiles = from_pixel_table(
-        pixels, meta, compression=compression, aligned=aligned
-    )
-    if dense:
-        # the reference warps the full covering grid, so all-nodata
-        # tiles exist too (e.g. the corners of a rotated Albers
-        # footprint's bounding box). One nodata blob is encoded once on
-        # the driver and attached as a literal to the anti-joined
-        # missing cells — no per-tile encode work. Pass dense=False for
-        # sparse output on mostly-empty extents at scale.
-
-        from raquet_spark.functions import quadbin as qbf
-        from raquet_spark.functions.bands import DTYPES, encode_block
-
-        cell = qbf.tile_to_cell_sql("x", "y", z, "spark")
-        full = spark.sql(
-            f"""
-            SELECT {cell} AS block
-            FROM (SELECT explode(sequence({tx0}, {tx1})) AS x)
-            CROSS JOIN (SELECT explode(sequence({ty0}, {ty1})) AS y)
-            """
-        )
-        missing = full.join(tiles.select("block"), "block", "left_anti")
-        fill_cols = []
-        for b in bands:
-            dt = np.dtype(DTYPES[b.type])
-            fill = b.nodata if b.nodata is not None else 0
-            blob = encode_block(
-                np.full(block_size * block_size, fill, dtype=dt), b.type, compression
-            )
-            fill_cols.append(F.lit(bytearray(blob)).alias(b.name))
-        tiles = tiles.unionByName(missing.select("block", *fill_cols))
-    if stats:
-        from raquet_spark.operators.tile_stats import with_tile_stats
-
-        tiles = with_tile_stats(tiles, meta)
-    return tiles, meta

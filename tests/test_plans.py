@@ -280,13 +280,11 @@ def test_halo_level_single_shuffle(spark):
 
 
 def test_geotiff_import_shuffle_budget(spark):
-    """The real-GeoTIFF import (target-driven dense nearest for
-    4326/3857 sources) is MAP-ONLY when the source side broadcasts (as
-    here): the block-major target grid keeps pixels tile-contiguous
-    through the broadcast gather, so the tile assembly runs aligned
-    with NO exchange (r17; was 1 — the tiling groupBy). At scale the
-    gather degrades to a shuffled join and the assembly to the grouped
-    path: at most 3 exchanges. Projection math and segment decode stay
+    """The real-GeoTIFF import (target-driven dense nearest) is
+    MAP-ONLY for a broadcast-class source (as here): each tile is built
+    by the per-tile kernel, NO exchange. Past the broadcast class the
+    gather is a shuffled join and the assembly the grouped path: at
+    most 3 exchanges. Projection math and segment decode stay
     map-side; never a nested-loop join."""
     import os
 
@@ -305,7 +303,7 @@ def test_geotiff_import_shuffle_budget(spark):
     assert count_exchanges(tiles) == 0
 
     # projected CRS route through the Snyder forward projections into
-    # the same target-driven join — same shuffle budget, no BNLJ
+    # the same per-tile kernel — same shuffle budget, no BNLJ
     nlcd = "/root/reference/tests/Annual_NLCD_LndCov_2023_CU_C1V0.tif"
     tiles2, _ = geotiff_to_raquet(
         spark, nlcd, block_size=256, dense=False, stats=False
@@ -323,9 +321,9 @@ def test_geotiff_import_shuffle_budget(spark):
 
 
 def test_bilinear_import_fused_exchange_free(spark):
-    """The broadcast-class bilinear import takes the fused separable
-    kernel gather (r18 session 4): NO exchange, NO join — one
-    MapInPandas over tile ids (the near import's plan shape)."""
+    """The broadcast-class bilinear import blends inside the per-tile
+    kernel: NO exchange, NO join — one MapInPandas over tile ids (the
+    near import's plan shape)."""
     import os
 
     import pytest as _pytest
@@ -347,14 +345,16 @@ def test_bilinear_import_fused_exchange_free(spark):
     assert no_nested_loops(tiles)
     assert no_python_udfs(tiles)
     assert count_exchanges(tiles) == 0
+    assert not has_broadcast_join(tiles)
 
 
-def test_bilinear_import_join_path_three_shuffles_no_bnlj(spark, monkeypatch):
-    """The JOIN-path resampled import (what non-separable / SHJ-class
-    sources still run) is exactly three exchanges — the (sx, sy)
-    neighborhood gather join, the blend groupBy(target pixel), and the
-    tiling groupBy(block) — with NO nested-loop join anywhere (the
-    4x-contribution explode is map-side) and no Python row UDFs."""
+def test_bilinear_import_join_path_three_shuffles_no_bnlj(spark):
+    """The join warp (the route past the broadcast class, and the
+    per-tile kernel's reference) is at most three exchanges — the
+    (sx, sy) neighborhood gather join, the blend groupBy(target pixel),
+    and the tiling groupBy(block) — with NO nested-loop join anywhere
+    (the 4x-contribution explode is map-side) and no Python row
+    UDFs."""
     import os
 
     import pytest as _pytest
@@ -363,17 +363,22 @@ def test_bilinear_import_join_path_three_shuffles_no_bnlj(spark, monkeypatch):
     if not os.path.exists(path):
         _pytest.skip("reference raster not available")
     import raquet_spark.sources.tiff_reader as tr
+    from raquet_spark.operators.tiling import from_pixel_table
     from raquet_spark.plans.inspect import (
         count_exchanges,
         no_nested_loops,
         no_python_udfs,
     )
 
-    monkeypatch.setattr(tr, "_fused_gather_eligible", lambda *a, **k: False)
-    tiles, _ = tr.geotiff_to_raquet(
-        spark, path, block_size=128, dense=False, stats=False,
-        resampling="bilinear",
+    info = tr.read_tiff_structure(path)
+    z = tr._pick_zoom(info, 128)
+    bounds, ext = tr._tile_aligned_bounds(tr._lonlat_corners(info), z)
+    meta = tr._tiff_metadata(info, z, 128, "gzip", False, bounds, ext)
+    pixels = tr._resampled_pixels(
+        spark, tr.tiff_pixel_table(spark, info), info, z, 128, "bilinear",
+        ext,
     )
+    tiles = from_pixel_table(pixels, meta)
     assert no_nested_loops(tiles)
     assert no_python_udfs(tiles)
     assert count_exchanges(tiles) <= 3
@@ -387,9 +392,9 @@ def test_bilinear_import_join_path_three_shuffles_no_bnlj(spark, monkeypatch):
 
 def test_netcdf_import_two_shuffles(spark, tmp_path):
     """NetCDF conversion keeps the GeoTIFF import's plan shape — with
-    a broadcast-sized source the near import is MAP-ONLY (r17: aligned
-    tile assembly, no exchange) and ALL time steps ride the same
-    broadcast gather (time_cf is a join output, not a driver loop)."""
+    a broadcast-sized source the near import is MAP-ONLY (the per-tile
+    kernel, no exchange, no join) and ALL time steps ride the same
+    tile build (time_cf is a tile key, not a driver loop)."""
     import numpy as np
 
     from raquet_spark.plans.inspect import count_exchanges, no_nested_loops
@@ -411,6 +416,7 @@ def test_netcdf_import_two_shuffles(spark, tmp_path):
     tiles, _ = netcdf_to_raquet(spark, path, block_size=64, stats=False)
     assert no_nested_loops(tiles)
     assert count_exchanges(tiles) == 0
+    assert not has_broadcast_join(tiles)
 
 
 def test_sharded_export_strip_plan_single_shuffle(spark):

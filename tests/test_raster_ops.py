@@ -257,52 +257,6 @@ def test_pixel_table_tiling_roundtrip(spark):
     assert got == want
 
 
-def test_aligned_tiling_matches_grouped(spark, tmp_path):
-    """The r17 aligned (exchange-free) tile assembly is byte-identical
-    to the grouped path on a time-stepped import — partial edge tiles,
-    interleaved time_cf rows, and the contiguity contract all
-    exercised end to end."""
-    import numpy as np
-
-    import raquet_spark.operators.tiling as tiling_mod
-    from raquet_spark.sources.netcdf import netcdf_to_raquet
-    from raquet_spark.testing import write_netcdf_classic
-
-    nlat, nlon, nt = 40, 60, 2
-    gy, gx = np.mgrid[0:nlat, 0:nlon]
-    data = np.stack(
-        [((gx * 7 + gy * 11 + t * 13) % 199 - 50) for t in range(nt)]
-    ).astype("<i2")
-    path = str(tmp_path / "al.nc")
-    write_netcdf_classic(
-        path, 37.9875 - 0.025 * np.arange(nlat),
-        -122.9875 + 0.025 * np.arange(nlon), data,
-        times=np.arange(nt, dtype="f8"), nc_type=3,
-        scale_factor=0.5, add_offset=100.0, fill_value=-999,
-    )
-    tiles_aligned, _ = netcdf_to_raquet(spark, path, block_size=64, stats=False)
-    orig = tiling_mod.from_pixel_table
-
-    def grouped(pixels, metadata, compression="gzip", extra_keys=(),
-                aligned=False):
-        return orig(pixels, metadata, compression=compression,
-                    extra_keys=extra_keys, aligned=False)
-
-    tiling_mod.from_pixel_table = grouped
-    try:
-        tiles_grouped, _ = netcdf_to_raquet(
-            spark, path, block_size=64, stats=False
-        )
-    finally:
-        tiling_mod.from_pixel_table = orig
-    a = {(r["block"], r["time_cf"]): bytes(r["band_1"])
-         for r in tiles_aligned.collect()}
-    b = {(r["block"], r["time_cf"]): bytes(r["band_1"])
-         for r in tiles_grouped.collect()}
-    assert a == b
-    assert len(a) > 0
-
-
 def test_downsample_kernels_nodata_masked():
     import numpy as np
 
