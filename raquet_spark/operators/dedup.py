@@ -620,6 +620,7 @@ def _components_driver_side(
         m = mins.get(r)
         if m is None or n < m:
             mins[r] = n
+    import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
     # nullable True: the loop path's labels come out of joins with
@@ -629,8 +630,14 @@ def _components_driver_side(
         StructField("node", ftype, True),
         StructField("component", ftype, True),
     ])
-    data = [(n, mins[find(n)]) for n in parent]
-    return e.sparkSession.createDataFrame(data, schema)
+    nodes = list(parent)
+    # through Arrow: the plan leaf is a LocalRelation on the JVM, so
+    # executing the labels starts no Python worker (a list of rows
+    # would plan a LogicalRDD over a pickled Python RDD)
+    labels = pa.table(
+        {"node": nodes, "component": [mins[find(n)] for n in nodes]}
+    )
+    return e.sparkSession.createDataFrame(labels, schema)
 
 
 def connected_components(
@@ -737,7 +744,8 @@ def connected_components(
     e_level = StorageLevel.DISK_ONLY if big else None
     with width_scope:
         e = raw.distinct().localCheckpoint(eager=True, storageLevel=e_level)
-        small = _components_driver_side(e, small_graph_edges)
+        small = (_components_driver_side(e, small_graph_edges)
+                 if small_graph_edges > 0 else None)
         if small is not None:
             return small
         labels = (

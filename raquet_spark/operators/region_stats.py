@@ -207,48 +207,33 @@ def zonal_stats(
     final per-zone six-column aggregation, O(zones) rows. A tile spanning
     two zones contributes to both (bbox-intersection semantics, matching
     region_stats per zone)."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from raquet_spark.functions import quadbin as qb_fns
 
     spark = tiles_with_stats.sparkSession
-    rows = []
+    zone_ids: list[str] = []
+    blocks: list[int] = []
     all_cells: set[int] = set()
     for zone_id, (west, south, east, north) in zones:
         z = resolve_resolution(resolution, metadata, (west, south, east, north))
         cells = qb_fns.py_bbox_to_cells(west, south, east, north, z)
         all_cells.update(cells)
-        # normalize ids to string up front so the literal and the
-        # createDataFrame fallback paths emit the SAME column type (a
-        # non-str id would otherwise work under the 1024-cell literal
-        # cutoff and crash on the typed-schema parallelize above it)
-        rows.extend((str(zone_id), c) for c in cells)
+        # ids normalized to string: the column is typed by the schema
+        zone_ids.extend([str(zone_id)] * len(cells))
+        blocks.extend(int(c) for c in cells)
     # the (zone, block) map is driver-known and usually tiny (bbox
-    # covers at the query zoom): inline it as a literal explode — one
-    # fewer scheduled job per query, and the broadcast build reads a
-    # local plan node. Two guards (review r14): an EMPTY literal array
-    # has VOID element type (struct field extraction fails to resolve),
-    # and a huge zone set would embed O(cells) literal expressions in
-    # the plan (Catalyst analysis + driver serialization blow-up) —
-    # both fall back to the parallelize path.
-    if 0 < len(rows) <= 1024:
-        zone_map = spark.range(1).select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(zid).alias("zone_id"),
-                        F.lit(int(c)).alias("block"),
-                    )
-                    for zid, c in rows
-                ])
-            ).alias("_e")
-        ).select(
-            "_e.zone_id", F.col("_e.block").cast("long").alias("block")
-        )
-    else:
-        zone_map = spark.createDataFrame(
-            rows, "zone_id string, block bigint"
-        )
+    # covers at the query zoom): it enters the plan through Arrow as a
+    # JVM LocalRelation — no Python worker at execution, any size, and
+    # an empty zone set is just an empty relation
+    zone_map = spark.createDataFrame(
+        pa.table({
+            "zone_id": pa.array(zone_ids, pa.string()),
+            "block": pa.array(blocks, pa.int64()),
+        }),
+        "zone_id string, block bigint",
+    )
 
     # prune the fact scan to the union cover before the broadcast join
     lo, hi = (min(all_cells), max(all_cells)) if all_cells else (0, -1)

@@ -22,6 +22,7 @@ from __future__ import annotations
 import math
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -193,7 +194,8 @@ def cosine_topk(
     ).collect()
     if not qrows:
         return candidates.sparkSession.createDataFrame(
-            [], "query_id long, cand_id long, score double, rn int"
+            pa.table({"query_id": [], "cand_id": [], "score": [], "rn": []}),
+            "query_id long, cand_id long, score double, rn int",
         )
     qids = np.asarray([r["query_id"] for r in qrows], dtype=np.int64)
     Q = np.asarray([list(r["_qv"]) for r in qrows], dtype=np.float64)

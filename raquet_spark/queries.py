@@ -3663,7 +3663,6 @@ GROUP BY t
 """
 
 
-_QCF_OFF = 10_000_000
 _QCF_SENT = {"pos": "qsentinelgood", "neg": "qsentinelbad"}
 
 
@@ -3692,10 +3691,6 @@ def quality_classifier_filter_spark(spark: SparkSession, sf_dir: str) -> DataFra
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    # negative-twin ids must never collide with real doc_ids at ANY
-    # scale factor: derive the offset from the observed max, not a
-    # fixed constant (a 10M constant silently collides past 10M docs)
-    off = (docs.agg(F.max("doc_id")).first()[0] or 0) + 1
     # r17 shuffle/boundary diet on the bench's heaviest line, all
     # result-identical (oracle re-verified at sf0.001/0.01/0.1):
     # - xxhash64 buckets: the oracle is closed-form over the planted
@@ -3725,23 +3720,23 @@ def quality_classifier_filter_spark(spark: SparkSession, sf_dir: str) -> DataFra
         keep_tokenless=True,
     ).persist()
     try:
-        bp, bn = spark.sql(
-            f"SELECT CAST(pmod(xxhash64('{_QCF_SENT['pos']}'), 64) AS INT),"
-            f" CAST(pmod(xxhash64('{_QCF_SENT['neg']}'), 64) AS INT)"
-        ).first()
-
-        def twin(bucket: int, y: float, id_expr: str) -> DataFrame:
+        def twin(sentinel: str, y: float) -> DataFrame:
+            # the sentinel's bucket is a constant-folded term per
+            # column (no probe job): +6.0 in its bucket, +0.0 elsewhere
+            # — counts are never -0.0, so the +0.0 is bit-identical.
+            # Twins share doc_id; it never reaches the output (score
+            # feeds groupBy(source, label_pred) directly)
             cols = [
-                f"c{i} + 6.0D AS c{i}" if i == bucket else f"c{i}"
+                f"c{i} + IF(pmod(xxhash64('{sentinel}'), 64) = {i},"
+                f" 6.0D, 0.0D) AS c{i}"
                 for i in range(64)
             ]
             return base.selectExpr(
-                f"{id_expr} AS doc_id", "source",
-                f"CAST({y} AS DOUBLE) AS y", *cols,
+                "doc_id", "source", f"CAST({y} AS DOUBLE) AS y", *cols,
             )
 
-        counts = twin(bp, 1.0, "doc_id").unionByName(
-            twin(bn, 0.0, f"doc_id + {off}")
+        counts = twin(_QCF_SENT["pos"], 1.0).unionByName(
+            twin(_QCF_SENT["neg"], 0.0)
         )
         feats = _normalize_counts(counts, 64, carry_cols=("y", "source"))
         # n_iter: measured convergence on this gate corpus (r11,
@@ -3760,9 +3755,9 @@ def quality_classifier_filter_spark(spark: SparkSession, sf_dir: str) -> DataFra
         # materialize the (sources x 2)-row aggregate HERE so the
         # cache can be released before returning (the driver
         # collects lazily, after this function exits) — no cached
-        # blocks leak into the rest of the session
-        rows = out.collect()
-        return spark.createDataFrame(rows, schema=out.schema)
+        # blocks leak into the rest of the session. Through Arrow, so
+        # the returned plan is a JVM LocalRelation, not a Python RDD
+        return spark.createDataFrame(out.toArrow(), schema=out.schema)
     finally:
         base.unpersist()
 
@@ -4561,13 +4556,17 @@ FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id
 
 
 def dedup_minhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark execution of :func:`dedup_minhash` with the band keys
-    computed exactly once: Spark inlines CTEs (no ReuseExchange fires
-    for the self-join sides), so the SQL rendering runs the
-    shingle/hash/min pipeline twice. Checkpointing the band table
-    halves that work — the 100 TB entry point, where pipeline compute
-    dominates. (At bench scale the SQL path measures faster: the
-    checkpoint's materialization cost exceeds the saved recompute, so
+    """Spark execution of :func:`dedup_minhash` over a checkpointed
+    band table. The SQL rendering does NOT run the shingle/hash/min
+    pipeline twice: Spark inlines the CTE into both join sides, but its
+    executed plan reuses the mins shuffle (a ``ReusedExchange`` under
+    the second side), so tokenize → shingle → hash → partial min runs
+    once. What each side still repeats is the post-shuffle work — the
+    final min merge and the band explode. The checkpoint buys that
+    saving, and truncated lineage: the self-join reads stored band rows,
+    so a retried join task does not re-run the shuffle stages behind
+    them. (At bench scale the SQL path measures faster: the
+    checkpoint's materialization costs more than the repeated merge, so
     ``queries()`` registers the SQL rendering and this stays the
     large-scale alternative.)"""
     from pyspark.sql import functions as F

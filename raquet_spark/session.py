@@ -15,6 +15,8 @@ import zipfile
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[str] = set()
+# generated classes the JVM-wide codegen cache holds (see get_spark)
+CODEGEN_CACHE_ENTRIES = 1024
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -82,6 +84,16 @@ def get_spark(
         # task (Spark 3.2+ SHJ spills, so this is safe): skips two
         # sorts on every fact-fact join; AQE still re-plans per stats
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        # Codegen cache sized to hold a whole pass of the heavy lines.
+        # Measured working sets (local[4]): a pass of the five curation
+        # lines compiles 128-142 classes cold, a convert pass 93. With
+        # Spark's default 100-entry LRU they evict each other in order,
+        # so every repeat pass recompiles (janino) and re-JITs them:
+        # 124-132 per warm curate pass, 31-37 per convert pass. At 1024
+        # a warm pass compiles curate 0 and convert 6, and a curate
+        # pass loads ~30 classes instead of ~260.
+        # A static conf — it must be set before the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -43,6 +43,7 @@ import zlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2201,8 +2202,11 @@ def _resampled_pixels(
         rn_t = (np.zeros(len(gys), dtype="i8") if row_ni is None else
                 _row_len(row_ni, np.floor(fsy_rows).astype("i8")))
         rowmap = spark.createDataFrame(
-            [(int(g), float(f), int(rn))
-             for g, f, rn in zip(gys, fsy_rows, rn_t)],
+            pa.table({
+                "gy": gys.astype("i8"),
+                "_fsy_row": np.asarray(fsy_rows, dtype="f8"),
+                "_rn": np.asarray(rn_t, dtype="i8"),
+            }),
             "gy bigint, _fsy_row double, _rn bigint",
         )
         tgt = (
@@ -2340,8 +2344,9 @@ def _resampled_pixels(
         # contributions renormalize in the shared blend below —
         # candidate volume is 4×/16× the OUTPUT, same as the affine
         # path at the matching kernel.
+        row_ni = np.asarray(info["row_ni"], dtype="i8")
         rows_df = spark.createDataFrame(
-            [(j, int(rn)) for j, rn in enumerate(info["row_ni"])],
+            pa.table({"syn": np.arange(len(row_ni)), "_rn": row_ni}),
             "syn bigint, _rn bigint",
         )
         lon_e = f"(fsx * {a} + {ox})"

@@ -9,8 +9,10 @@ signal the r18 classifier/components work optimized), and optional
                                                  # plans/r18/<q>_<tag>.txt
     SPARK_GRAFT_TAG=after python scripts/measure_r18.py --plans q1
 
-Prints one JSON line per query: name, runs, min, jobs (steady-state,
-measured on the LAST run via the status tracker).
+Prints one JSON line per query: name, runs, min, jobs and compiles
+(steady-state, measured on the LAST run: Spark jobs via the DAG
+scheduler's job ids, janino compiles via Spark's codegen metrics — a
+warm run that still compiles means the codegen cache is thrashing).
 """
 from __future__ import annotations
 
@@ -56,19 +58,26 @@ def main() -> None:
         jid = sc._jsc.sc().dagScheduler().nextJobId()
         return jid if isinstance(jid, int) else jid.get()
 
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     results = {}
     for name in args:
         spark.sparkContext.setJobDescription(f"measure:{name}")
         runs = []
-        jobs_last = None
+        jobs_last = compiles_last = None
         for i in range(3):
-            before = next_job_id()
+            before, c0 = next_job_id(), compiles()
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             df.count()
             runs.append(round(time.perf_counter() - t0, 4))
             jobs_last = next_job_id() - before
-        results[name] = {"runs": runs, "min": min(runs), "jobs": jobs_last}
+            compiles_last = compiles() - c0
+        results[name] = {"runs": runs, "min": min(runs), "jobs": jobs_last,
+                         "compiles": compiles_last}
         print(json.dumps({"query": name, **results[name]}), flush=True)
         if want_plans:
             try:

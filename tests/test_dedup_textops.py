@@ -1258,3 +1258,22 @@ def test_components_driver_fast_path_matches_loop(spark):
     assert rows(connected_components(sdf)) == rows(
         connected_components(sdf, small_graph_edges=0)
     )
+
+    # same schema, nullable flags included, for both id types
+    for d in (df, sdf):
+        assert connected_components(d).schema == connected_components(
+            d, small_graph_edges=0
+        ).schema
+    # an empty edge list: the same empty result on both paths
+    empty = df.limit(0)
+    fast_e = connected_components(empty)
+    slow_e = connected_components(empty, small_graph_edges=0)
+    assert rows(fast_e) == rows(slow_e) == []
+    assert fast_e.schema == slow_e.schema
+    # the fast path's labels enter the plan through Arrow: a JVM
+    # LocalRelation, not a LogicalRDD over a pickled Python RDD
+    from raquet_spark.plans.inspect import optimized_plan
+
+    for out in (connected_components(df), fast_e):
+        plan = optimized_plan(out)
+        assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan

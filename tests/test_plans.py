@@ -20,7 +20,7 @@ from raquet_spark.plans import (
     read_schema_columns,
 )
 from raquet_spark.plans.inspect import executed_plan as _plan
-from raquet_spark.plans.inspect import no_nested_loops
+from raquet_spark.plans.inspect import no_nested_loops, optimized_plan
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -935,3 +935,18 @@ def test_hashed_embeddings_carry_keeps_hash_aggregate(spark):
     rows = feats.select("doc_id", "y", "source").collect()
     assert len(rows) == 20
     assert {r["source"] for r in rows} == {"src0", "src1", "src2"}
+
+
+def test_quality_classifier_result_is_local_relation(spark, qs):
+    """The classifier materializes its small (sources x 2) aggregate
+    before returning; the rows come back through Arrow, so the returned
+    plan's leaf is a JVM LocalRelation — executing it starts no Python
+    worker (a list of rows would plan a LogicalRDD over a pickled
+    Python RDD)."""
+    df = qs["quality_classifier_filter"](spark, SF_DIR)
+    plan = optimized_plan(df)
+    assert plan.startswith("LocalRelation"), plan
+    assert "LogicalRDD" not in plan, plan
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("source", "string"), ("label_pred", "int"), ("n_docs", "bigint"),
+    ]
