@@ -2,14 +2,16 @@
 reference builds overviews by GDAL re-warping per zoom,
 /root/reference/raquet/raster2raquet.py:1959+ — single-node).
 
-Spark-first reformulation: level z-1 is an aggregation of level z —
-``groupBy(cell_to_parent(block))`` then ``applyInPandas`` assembles the
-up-to-4 children into a 2×(block) mosaic and downsamples by 2. Each
-level is ¼ the rows of the previous, the shuffle key is the parent cell
-(Morton-local ⇒ AQE-friendly), and levels are built in a short driver
-loop over zooms — O(max_zoom - min_zoom) stages, fully parallel within a
-stage. This is how the operation scales to 100 TB where the reference's
-warp cannot.
+Spark-first reformulation: levels z-1 .. z-k are an aggregation of
+level z — ``groupBy(cell_to_parent(block, z-k))`` then ``applyInPandas``
+assembles the up-to-4^k children into one mosaic and downsamples it by
+2, k times (:func:`build_levels_blocked`; :func:`build_level` is the
+k=1 pass). Each level is ¼ the rows of the previous, the shuffle key is
+the ancestor cell (Morton-local ⇒ AQE-friendly), and
+:func:`build_pyramid` runs a short driver loop of
+:data:`LEVELS_PER_PASS`-level passes — one shuffle per pass, fully
+parallel within it. This is how the operation scales to 100 TB where
+the reference's warp cannot.
 
 Resampling kernels (reference exposes the GDAL set,
 raster2raquet.py:933-946): ``near`` (top-left of each 2×2, GDAL-style),
@@ -313,48 +315,12 @@ def build_level(
     child_zoom: int,
     resampling: str = "average",
 ) -> DataFrame:
-    """Tiles at ``child_zoom - 1`` from tiles at ``child_zoom``."""
-    from raquet_spark.session import ensure_package_shipped
-
+    """Tiles at ``child_zoom - 1`` from tiles at ``child_zoom``: the
+    halo exchange for the wide kernels, else a one-level
+    :func:`build_levels_blocked` pass."""
     if resampling in _HALO_KERNELS:
         return build_level_halo(df, metadata, child_zoom, resampling)
-
-    ensure_package_shipped(df.sparkSession)
-    bands = [(b["name"], b["type"], parse_nodata(b.get("nodata"))) for b in metadata["bands"]]
-    bw = metadata["tiling"]["block_width"]
-    bh = metadata["tiling"]["block_height"]
-    compression = metadata.get("compression", "gzip")
-    parent_zoom = child_zoom - 1
-
-    children = (
-        df.where(F.expr(qb.cell_to_zoom_sql("block", "spark")) == child_zoom)
-        .withColumn("parent", F.expr(qb.cell_to_parent_sql("block", parent_zoom, "spark")))
-        .withColumn("cx", F.expr(qb.cell_to_x_sql("block", "spark")))
-        .withColumn("cy", F.expr(qb.cell_to_y_sql("block", "spark")))
-    )
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        parent = key[0]
-        out = {"block": [parent]}
-        for name, btype, nodata in bands:
-            dt = np.dtype(DTYPES[btype])
-            fill = nodata if nodata is not None else (np.nan if dt.kind == "f" else 0)
-            mosaic = np.full((bh * 2, bw * 2), fill, dtype=dt)
-            for row in pdf.to_dict("records"):
-                if row[name] is None:
-                    continue
-                tile = decode_block(row[name], btype).reshape(bh, bw)
-                dx, dy = int(row["cx"]) & 1, int(row["cy"]) & 1
-                mosaic[dy * bh : (dy + 1) * bh, dx * bw : (dx + 1) * bw] = tile
-            down = _downsample(mosaic, resampling, nodata)
-            out[name] = [encode_block(down.reshape(-1), btype, compression)]
-        return pd.DataFrame(out)
-
-    schema = "block bigint, " + ", ".join(f"{name} binary" for name, _, _ in bands)
-    children = pin_group_width(
-        children, "parent", approx_pixels=_level_pixels(metadata, child_zoom)
-    )
-    return children.groupBy("parent").applyInPandas(assemble, schema=schema)
+    return build_levels_blocked(df, metadata, child_zoom, child_zoom - 1, resampling)
 
 
 def build_levels_blocked(
@@ -369,12 +335,13 @@ def build_levels_blocked(
     Tiles group by their ``target_zoom`` ancestor; inside each group a
     single numpy pass assembles the (bh·2^k × bw·2^k) mosaic and
     downsamples it k times, emitting every intermediate level —
-    byte-identical to k sequential :func:`build_level` calls (each step
-    casts back to the band dtype before the next, matching the
-    level-at-a-time semantics). Intermediate levels are never shuffled:
-    vs per-level passes this is 1 shuffle instead of k, on the same
-    total input. Group memory is bounded by 4^k child tiles, so callers
-    cap k (see :func:`build_pyramid`'s ``levels_per_pass``)."""
+    byte-identical to k sequential one-level passes (each step casts
+    back to the band dtype before the next). A tile exists at a level
+    iff some child ROW lies in its footprint, even one whose band blobs
+    are null (those pixels are fill). Intermediate levels are never
+    shuffled: 1 shuffle instead of k, on the same total input. Group
+    memory is bounded by 4^k child tiles, so callers cap k (see
+    :data:`LEVELS_PER_PASS`)."""
     from raquet_spark.functions.quadbin import py_cell_to_tile, py_tile_to_cell
     from raquet_spark.session import ensure_package_shipped
 
@@ -396,23 +363,24 @@ def build_levels_blocked(
         for name, _, _ in bands:
             out[name] = []
         # coverage mask: a level-j tile exists only if some source child
-        # lies in its footprint — matches the per-level path, which never
-        # manufactures tiles out of pure fill
+        # row lies in its footprint — tiles are never made out of pure fill
+        offsets = []
         present = np.zeros((n, n), dtype=bool)
+        for blk in pdf["block"]:
+            cx, cy, _ = py_cell_to_tile(int(blk))
+            dx, dy = cx - ax * n, cy - ay * n
+            present[dy, dx] = True
+            offsets.append((dx, dy))
         per_band: dict[str, np.ndarray] = {}
         for name, btype, nodata in bands:
             dt = np.dtype(DTYPES[btype])
             fill = nodata if nodata is not None else (np.nan if dt.kind == "f" else 0)
             mosaic = np.full((bh * n, bw * n), fill, dtype=dt)
-            for blob, blk in zip(pdf[name], pdf["block"]):
-                if blob is None:
-                    continue
-                cx, cy, _ = py_cell_to_tile(int(blk))
-                dx, dy = cx - ax * n, cy - ay * n
-                present[dy, dx] = True
-                mosaic[dy * bh : (dy + 1) * bh, dx * bw : (dx + 1) * bw] = (
-                    decode_block(blob, btype).reshape(bh, bw)
-                )
+            for blob, (dx, dy) in zip(pdf[name], offsets):
+                if blob is not None:
+                    mosaic[dy * bh : (dy + 1) * bh, dx * bw : (dx + 1) * bw] = (
+                        decode_block(blob, btype).reshape(bh, bw)
+                    )
             per_band[name] = mosaic
         for j in range(1, k + 1):
             m = 1 << (k - j)  # tiles per side at zoom child_zoom - j
@@ -442,20 +410,23 @@ def build_levels_blocked(
     return children.groupBy("anc").applyInPandas(assemble, schema=schema)
 
 
+# levels per build_pyramid pass: per-group memory is bounded by 4^3 = 64
+# child tiles (≤64 MB mosaic for 256px float64 bands)
+LEVELS_PER_PASS = 3
+
+
 def build_pyramid(
     df: DataFrame,
     metadata: dict,
     min_zoom: int,
     resampling: str = "average",
-    levels_per_pass: int = 3,
 ) -> tuple[DataFrame, dict]:
     """Full overview pyramid from native tiles down to ``min_zoom``.
 
     Returns (tiles ∪ overviews, updated metadata). Levels are built
-    ``levels_per_pass`` at a time by :func:`build_levels_blocked` — one
-    shuffle per pass instead of per level, with per-group memory
-    bounded by 4^levels_per_pass child tiles (default 3 ⇒ ≤64 tiles,
-    ≤64 MB mosaic for 256px float64 bands). Each pass's coarsest level
+    :data:`LEVELS_PER_PASS` at a time by :func:`build_levels_blocked` —
+    one shuffle per pass instead of per level; wide (halo) kernels take
+    one :func:`build_level_halo` shuffle per level. Each pass's coarsest level
     feeds the next pass and appears in the result union, so it is
     lineage-truncated via ``localCheckpoint(False)`` — computed once,
     not once per duplicated subtree. (On a real cluster the equivalent
@@ -475,7 +446,7 @@ def build_pyramid(
             ).localCheckpoint(False)
             target = z - 1
         else:
-            target = max(z - levels_per_pass, min_zoom)
+            target = max(z - LEVELS_PER_PASS, min_zoom)
             pass_levels = build_levels_blocked(
                 current, metadata, z, target, resampling
             ).localCheckpoint(False)

@@ -917,8 +917,10 @@ def save_ann_index(
             ("codebook", m, k, [float(v) for v in cw], None)
             for k, cw in enumerate(book)
         ]
+    kind, i, j, vec, extra = zip(*rows)
     df = spark.createDataFrame(
-        rows, "kind string, i int, j int, vec array<double>, extra string"
+        pa.table({"kind": kind, "i": i, "j": j, "vec": vec, "extra": extra}),
+        "kind string, i int, j int, vec array<double>, extra string",
     )
     df.coalesce(1).write.mode("overwrite").parquet(path)
 

@@ -19,6 +19,7 @@ import json
 import os
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from raquet_spark.functions import dialect as dl
@@ -1343,7 +1344,7 @@ def geotiff_overview_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFr
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from raquet_spark.operators.pyramid import build_levels_blocked
+    from raquet_spark.operators.pyramid import build_level
     from raquet_spark.operators.tile_stats import with_tile_stats
     from raquet_spark.operators.tiling import from_pixel_table
     from raquet_spark.sources.geotiff import read_geotiff, write_geotiff
@@ -1354,7 +1355,7 @@ def geotiff_overview_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFr
     tiles, meta = _make_raster(spark)
     if path is None:
         base = tiles.select("block", "band_1")  # drop the raquet metadata row cols
-        levels = build_levels_blocked(base, meta, r["zoom"], r["zoom"] - 1, "average")
+        levels = build_level(base, meta, r["zoom"], "average")
         path = os.path.join(tempfile.mkdtemp(prefix="raquet_q_ovr_"), "ovr.tif")
         write_geotiff(
             base.unionByName(levels), meta, path,
@@ -1648,19 +1649,20 @@ def rasterize_wkt_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = (c["ax"], c["bx"], c["ay"], c["by"])
     b = (c["ax2"], c["bx2"], c["ay2"], c["by2"])
     wkts = spark.createDataFrame(
-        [(1, wkt_box(*a), 3.0), (2, wkt_box(*b), 7.0)],
+        pa.table({
+            "feature_id": [1, 2],
+            "wkt": [wkt_box(*a), wkt_box(*b)],
+            "value": [3.0, 7.0],
+        }),
         "feature_id long, wkt string, value double",
     )
     feats = wkts.select(
         "feature_id", F.expr(wkt_ring_expr("wkt")).alias("polygon"), "value"
     )
-    # perf note (r10, re-measured): the ~2x wall gap vs the struct twin
-    # is NOT per-row re-parse — the parse sits before the tile explode
-    # and evaluates once per feature either way (verified in the
-    # physical plan). The struct twin constant-folds its 2-row input to
-    # a LocalTableScan while this plan keeps a Scan ExistingRDD +
-    # codegen of the regexp parse; the delta is plan-compile constants
-    # at fixture scale (a repartition barrier was A/B'd: no gain).
+    # perf note: the parse sits before the tile explode and evaluates
+    # once per feature (verified in the physical plan); the 2-row input
+    # is a LocalRelation, so the only work beyond the struct twin is
+    # codegen of the regexp parse.
     tiles, _meta = rasterize_features(
         feats, zoom=zoom, block_size=bs, band_type="uint8", nodata=0.0,
         compression=None,
@@ -4388,8 +4390,10 @@ def raster_point_value_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from raquet_spark.operators.point_query import raster_value
 
     tiles, meta = _make_raster(spark)
+    ids, lons, lats = zip(*_point_query_points())
     points = spark.createDataFrame(
-        _point_query_points(), "id long, lon double, lat double"
+        pa.table({"id": ids, "lon": lons, "lat": lats}),
+        "id long, lon double, lat double",
     )
     return raster_value(tiles, points, meta)
 
@@ -4511,10 +4515,13 @@ SELECT doc_id, {_minhash_mins(d)} FROM hashes GROUP BY doc_id
 
 
 def _minhash_bands_sql(d: str) -> str:
-    """(doc_id, bk) band keys — the expensive shingle/hash/min pipeline,
-    factored out so the Spark side can compute it ONCE (checkpointed)
-    before the self-join; the oracle inlines it per side (DuckDB
-    materializes CTEs, so it pays no double-compute)."""
+    """(doc_id, bk) band keys — the shingle/hash/min pipeline that
+    feeds :func:`dedup_minhash`'s band self-join. Spark inlines the CTE
+    into both join sides but reuses the mins shuffle (``ReusedExchange``),
+    so only the final min merge and the band explode repeat per side;
+    DuckDB materializes the CTE. Corpora too large for this rendering go
+    through :func:`raquet_spark.operators.dedup.minhash_dedup_pairs`
+    (``auto_width=True``)."""
     el = lambda i: dl.arr_el("toks", i, d)  # noqa: E731
     shingle = f"concat({el('i')}, ' ', {el('i + 1')}, ' ', {el('i + 2')})"
     shingles = dl.arr_transform(
@@ -4555,39 +4562,9 @@ FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id
 """
 
 
-def dedup_minhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark execution of :func:`dedup_minhash` over a checkpointed
-    band table. The SQL rendering does NOT run the shingle/hash/min
-    pipeline twice: Spark inlines the CTE into both join sides, but its
-    executed plan reuses the mins shuffle (a ``ReusedExchange`` under
-    the second side), so tokenize → shingle → hash → partial min runs
-    once. What each side still repeats is the post-shuffle work — the
-    final min merge and the band explode. The checkpoint buys that
-    saving, and truncated lineage: the self-join reads stored band rows,
-    so a retried join task does not re-run the shuffle stages behind
-    them. (At bench scale the SQL path measures faster: the
-    checkpoint's materialization costs more than the repeated merge, so
-    ``queries()`` registers the SQL rendering and this stays the
-    large-scale alternative.)"""
-    from pyspark.sql import functions as F
-
-    register_views(spark, sf_dir)
-    bands = spark.sql(_minhash_bands_sql("spark")).localCheckpoint(eager=False)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
 def _simhash_chunks_sql(d: str) -> str:
-    """(doc_id, simhash, ck) chunk keys — factored out like
-    :func:`_minhash_bands_sql` so the Spark side checkpoints it once."""
+    """(doc_id, simhash, ck) chunk keys — the token-hash/bit-sum
+    pipeline that feeds :func:`dedup_simhash`'s chunk self-join."""
     h = dl.md5_int("tok", d, hex_chars=12)
     cast_s = "STRING" if d == "spark" else "VARCHAR"
     # all 4 12-bit chunks as prefixed strings in ONE array → explode →
@@ -4644,34 +4621,6 @@ WHERE {dl.bit_count(xor, d)} <= 3
 """
 
 
-def dedup_simhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark execution of :func:`dedup_simhash` with the chunk table
-    checkpointed so the token-hash/bit-sum pipeline runs once, not once
-    per self-join side."""
-    from pyspark.sql import functions as F
-
-    register_views(spark, sf_dir)
-    chunks = spark.sql(_simhash_chunks_sql("spark")).localCheckpoint(eager=False)
-    a, b = chunks.alias("a"), chunks.alias("b")
-    hamming = F.expr(
-        dl.bit_count(dl.bxor("a.simhash", "b.simhash", "spark"), "spark")
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.ck") == F.col("b.ck"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(hamming <= 3)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-    )
-
-
 def ngram_jaccard(d: str) -> str:
     """Character-3-gram Jaccard **verification of MinHash-LSH
     candidates** — the scale shape of set-similarity dedup: exact
@@ -4711,35 +4660,6 @@ def _jaccard_expr(d: str) -> str:
         f"round(CAST({inter} AS DOUBLE) /\n"
         f"             ({dl.arr_size('ga.grams', d)} + "
         f"{dl.arr_size('gb.grams', d)} - {inter}), 6)"
-    )
-
-
-def ngram_jaccard_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark execution of :func:`ngram_jaccard`: candidates come from
-    the checkpointed-band MinHash path and the gram arrays are
-    checkpointed once, reused by both join sides (the SQL rendering
-    would compute the gram projection twice and the LSH pipeline
-    thrice).
-
-    Measured r17 (same-session interleave, sf0.1 warm mins): the SQL
-    rendering runs 0.81 s vs 4.5 s for this variant — checkpoint-
-    scanning the wide gram ARRAYS costs far more than recomputing them
-    inline with codegen at bench scale. This stays the alternative for
-    corpora where the tokenize/hash pipeline dominates the gram-array
-    materialization, not the registered query."""
-    from pyspark.sql import functions as F
-
-    cand = dedup_minhash_pairs_df(spark, sf_dir).alias("c")
-    g = spark.sql(_grams_sql("spark")).localCheckpoint(eager=False)
-    ga, gb = g.alias("ga"), g.alias("gb")
-    return (
-        cand.join(ga, F.col("ga.doc_id") == F.col("c.doc_a"))
-        .join(gb, F.col("gb.doc_id") == F.col("c.doc_b"))
-        .select(
-            F.col("c.doc_a").alias("doc_a"),
-            F.col("c.doc_b").alias("doc_b"),
-            F.expr(_jaccard_expr("spark")).alias("jaccard"),
-        )
     )
 
 
@@ -6664,16 +6584,16 @@ def ann_ivf_planted_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pyramid_pixel_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One pyramid level (nodata-aware 2×2 average, blocked builder)
+    """One pyramid level (nodata-aware 2×2 average)
     then per-parent-tile stats — oracle-checks the actual downsampled
     PIXELS, not just the stats rollup."""
     from pyspark.sql import functions as F
 
-    from raquet_spark.operators.pyramid import build_levels_blocked
+    from raquet_spark.operators.pyramid import build_level
     from raquet_spark.operators.tile_stats import with_tile_stats
 
     tiles, meta = _make_raster(spark)
-    parent = build_levels_blocked(tiles, meta, _R["zoom"], _R["zoom"] - 1, "average")
+    parent = build_level(tiles, meta, _R["zoom"], "average")
     stats = with_tile_stats(parent, meta)
     return stats.select(
         "block",

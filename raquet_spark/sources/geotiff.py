@@ -1,30 +1,48 @@
-"""GDAL-free GeoTIFF export: RaQuet tiles → a striped GeoTIFF file.
+"""GDAL-free GeoTIFF export: RaQuet tiles → GeoTIFF files.
 
 Reference parity: /root/reference/raquet/raquet2geotiff.py:84-277 mosaics
 tiles into a GDAL GTiff dataset in a worker process (EPSG:3857,
 block-aligned writes, per-band nodata). This module produces the same
-kind of artifact without GDAL: strip payloads are assembled
-DISTRIBUTED — one strip per tile row via ``applyInPandas`` keyed by
-``qb_y`` (each strip is full raster width × ``block_height`` rows,
-pixel-interleaved across bands) — and the driver only streams the
-already-encoded strips to disk in order (``toLocalIterator``; bounded
-memory: one strip at a time). Writing one .tif is inherently a
-single-file funnel, so the driver does no pixel math, only IO.
+kind of artifact without GDAL, through three writers:
 
-The output is a classic little-endian TIFF, uncompressed, strip layout,
-``RowsPerStrip = block_height``, with the GeoTIFF tags (ModelPixelScale,
-ModelTiepoint, GeoKeyDirectory → EPSG:3857 projected, pixel-is-area)
-and GDAL's ASCII nodata tag. Georeferencing is derived exactly from the
-tile grid (web-mercator tile math), matching the reference's
+* :func:`write_geotiff` — one striped file. Strip payloads are
+  assembled DISTRIBUTED — one strip per tile row via ``applyInPandas``
+  keyed by ``qb_y`` (:func:`strip_table`; full raster width ×
+  ``block_height`` rows, pixel-interleaved across bands) — and the
+  driver only streams the already-encoded strips to disk in order
+  (``toLocalIterator``; bounded memory). Writing one .tif is inherently
+  a single-file funnel, so the driver does no pixel math, only IO.
+* :func:`write_geotiff_cog` — one tiled Cloud-Optimized GeoTIFF whose
+  TIFF tiles are the RaQuet blocks (map-only encode, no shuffle).
+* :func:`write_geotiff_sharded` — one striped file per group of tile
+  rows, written executor-side (no driver pixel IO at all).
+
+All three take ONE export plan (:func:`_export_plan`): interleaved →
+sequential bands, the per-zoom split of the table, overview level
+discovery, the max-zoom tile extent every level is anchored to (with
+the named empty-input error), and the per-level geometry and nodata
+fill segment. The single-file writers share one ordered
+stream-with-fill loop (:func:`_ordered_segments`).
+
+The output is classic little-endian TIFF (uncompressed, LZW or
+deflate) with the GeoTIFF tags (ModelPixelScale, ModelTiepoint,
+GeoKeyDirectory → EPSG:3857 projected, pixel-is-area) and GDAL's ASCII
+nodata tag. Georeferencing is derived exactly from the tile grid
+(web-mercator tile math), matching the reference's
 ``mercantile.xy_bounds``-based placement.
 """
 
 from __future__ import annotations
 
 import contextlib
+import copy
+import functools
+import itertools
 import math
 import os
 import struct
+from collections.abc import Iterable, Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -60,27 +78,17 @@ def _compress_strip(data: bytes, tiff_compression: str | None) -> bytes:
     raise ValueError(f"unsupported TIFF compression {tiff_compression!r}")
 
 
-def strip_table(
-    df: DataFrame,
-    metadata: dict,
-    bands: list[str] | None = None,
-    extent: tuple[int, int, int, int] | None = None,
-    tiff_compression: str | None = None,
-) -> tuple[DataFrame, dict]:
-    """Distributed strip assembly.
+def _segment_bytes(arr: np.ndarray, tiff_compression: str | None) -> bytes:
+    """One strip/tile payload: little-endian on disk regardless of host
+    order, then compressed."""
+    le = arr.astype(arr.dtype.newbyteorder("<"), copy=False)
+    return _compress_strip(le.tobytes(), tiff_compression)
 
-    Returns ``(strips, info)`` where ``strips`` has one row per tile row
-    — ``(strip bigint, data binary)`` — and ``info`` carries the raster
-    geometry the TIFF header needs. ``extent`` is the tile-grid extent
-    ``(x0, y0, x1, y1)`` inclusive; when None it is computed with one
-    min/max aggregation (a tiny all-to-one agg over tile keys, bounded
-    by tile count, same shape the reference derives from metadata
-    bounds)."""
-    from raquet_spark.session import ensure_package_shipped
 
-    ensure_package_shipped(df.sparkSession)
-    t = metadata["tiling"]
-    z, bw, bh = t["max_zoom"], t["block_width"], t["block_height"]
+def _select_bands(
+    metadata: dict, bands: list[str] | None
+) -> list[tuple[str, str, float | None]]:
+    """(name, type, nodata) of every exported band."""
     binfo = [
         (b["name"], b["type"], parse_nodata(b.get("nodata")))
         for b in metadata["bands"]
@@ -93,23 +101,153 @@ def strip_table(
         # same constraint as the reference exporter (raquet2geotiff.py
         # "Expect just one band type")
         raise ValueError(f"mixed band types not supported in one TIFF: {btypes}")
-    btype = binfo[0][1]
-    dt = np.dtype(DTYPES[btype])
+    return binfo
 
-    src = qb.with_tile(df.where(F.col("block") != 0), "block")
-    if extent is None:
-        ext_row = src.agg(
-            F.min("qb_x"), F.min("qb_y"), F.max("qb_x"), F.max("qb_y")
-        ).first()
-        x0, y0, x1, y1 = (int(v) for v in ext_row)
-    else:
-        x0, y0, x1, y1 = extent
-    n_tiles_x = x1 - x0 + 1
-    n_strips = y1 - y0 + 1
-    width = n_tiles_x * bw
-    nbands = len(binfo)
+
+def _level_info(
+    binfo: list[tuple[str, str, float | None]],
+    metadata: dict,
+    extent: tuple[int, int, int, int],
+) -> dict:
+    """Raster geometry of the tile-grid ``extent`` ``(x0, y0, x1, y1)``
+    (inclusive) at ``metadata``'s max zoom — what the TIFF header needs,
+    for the strip layout (one strip per tile row) and the tiled layout
+    (one TIFF tile per block) alike."""
+    t = metadata["tiling"]
+    z, bw, bh = t["max_zoom"], t["block_width"], t["block_height"]
+    x0, y0, x1, y1 = extent
+    ntx, nty = x1 - x0 + 1, y1 - y0 + 1
     nodata = binfo[0][2]
-    fill = 0 if nodata is None else nodata
+    tile_m = 2.0 * _ORIGIN_SHIFT / (1 << z)  # tile size in mercator meters
+    return {
+        "width": ntx * bw,
+        "height": nty * bh,
+        "n_strips": nty,
+        "rows_per_strip": bh,
+        "tile_width": bw,
+        "tile_height": bh,
+        "n_tiles": ntx * nty,
+        "nbands": len(binfo),
+        "band_type": binfo[0][1],
+        "nodata": nodata,
+        "ulx": -_ORIGIN_SHIFT + x0 * tile_m,
+        "uly": _ORIGIN_SHIFT - y0 * tile_m,
+        "xres": tile_m / bw,
+        "yres": tile_m / bh,
+        "fill": 0 if nodata is None else nodata,
+    }
+
+
+@dataclass
+class _ExportLevel:
+    """One zoom level of an export plan."""
+
+    level: int
+    df: DataFrame  # this zoom's tiles
+    metadata: dict  # max_zoom = level
+    extent: tuple[int, int, int, int]  # tile-grid extent, inclusive
+    info: dict  # :func:`_level_info`
+    segment_width: int  # pixels per fill segment row: strip or tile width
+    compression: str | None
+
+    @functools.cached_property
+    def fill(self) -> bytes:
+        """One all-nodata segment, encoded like the data segments. Built
+        on first use, so size guards can run before a huge strip is
+        allocated."""
+        i = self.info
+        return _segment_bytes(
+            np.full(
+                i["rows_per_strip"] * self.segment_width * i["nbands"],
+                i["fill"],
+                dtype=DTYPES[i["band_type"]],
+            ),
+            self.compression,
+        )
+
+
+def _export_plan(
+    df: DataFrame,
+    metadata: dict,
+    bands: list[str] | None,
+    compression: str | None,
+    include_overviews: bool = False,
+    tiled: bool = False,
+) -> tuple[dict, list[_ExportLevel]]:
+    """The export plan every writer takes: ``(metadata, levels)`` with
+    sequential-layout ``metadata`` and one :class:`_ExportLevel` per
+    exported zoom — the max zoom first, then (``include_overviews``)
+    every lower zoom present in ``df``, highest first. RaQuet stores the
+    pyramid in the same table, so lower zooms ARE the overview levels.
+
+    Spark jobs: one tiny distinct over tile zooms when
+    ``include_overviews``, then one min/max aggregation for the max-zoom
+    extent. That extent anchors every level (``>> dz``), so all levels
+    cover the same geographic window."""
+    if metadata.get("band_layout") == "interleaved":
+        # BIP pixels column → per-band columns first (map-only)
+        from raquet_spark.operators.layout import to_sequential
+
+        df, metadata = to_sequential(df, metadata, compression=None)
+    binfo = _select_bands(metadata, bands)
+    z = metadata["tiling"]["max_zoom"]
+    zoom_col = F.expr(qb.cell_to_zoom_sql("block", "spark"))
+    base = df.where(F.col("block") != 0).withColumn("_z", zoom_col)
+
+    levels = [z]
+    if include_overviews:
+        avail = {int(r["_z"]) for r in base.select("_z").distinct().collect()}
+        levels += sorted((lv for lv in avail if lv < z), reverse=True)
+
+    ext_row = qb.with_tile(base.where(F.col("_z") == z), "block").agg(
+        F.min("qb_x"), F.min("qb_y"), F.max("qb_x"), F.max("qb_y")
+    ).first()
+    if ext_row is None or ext_row[0] is None:
+        raise ValueError("no tiles at max zoom to export")
+    x0, y0, x1, y1 = (int(v) for v in ext_row)
+
+    plan = []
+    for lv in levels:
+        dz = z - lv
+        meta_lv = copy.deepcopy(metadata)
+        meta_lv["tiling"]["max_zoom"] = lv
+        extent = (x0 >> dz, y0 >> dz, x1 >> dz, y1 >> dz)
+        info = _level_info(binfo, meta_lv, extent)
+        plan.append(_ExportLevel(
+            level=lv,
+            df=base.where(F.col("_z") == lv).drop("_z"),
+            metadata=meta_lv,
+            extent=extent,
+            info=info,
+            segment_width=info["tile_width"] if tiled else info["width"],
+            compression=compression,
+        ))
+    return metadata, plan
+
+
+def strip_table(
+    df: DataFrame,
+    metadata: dict,
+    extent: tuple[int, int, int, int],
+    bands: list[str] | None = None,
+    tiff_compression: str | None = None,
+) -> tuple[DataFrame, dict]:
+    """Distributed strip assembly over the tile-grid ``extent``
+    ``(x0, y0, x1, y1)`` (inclusive) of ``df``'s tiles at ``metadata``'s
+    max zoom.
+
+    Returns ``(strips, info)`` where ``strips`` has one row per tile row
+    holding tiles — ``(strip bigint, data binary)``, ``strip`` counted
+    from ``y0`` — and ``info`` is the :func:`_level_info` geometry."""
+    from raquet_spark.session import ensure_package_shipped
+
+    ensure_package_shipped(df.sparkSession)
+    binfo = _select_bands(metadata, bands)
+    info = _level_info(binfo, metadata, extent)
+    bw, bh = info["tile_width"], info["rows_per_strip"]
+    width, nbands, fill = info["width"], info["nbands"], info["fill"]
+    dt = np.dtype(DTYPES[info["band_type"]])
+    x0, y0, x1, y1 = extent
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (qy,) = key
@@ -120,42 +258,85 @@ def strip_table(
             for bi, (name, bt, _) in enumerate(binfo):
                 tile = decode_block(row[name], bt).reshape(bh, bw)
                 arr[:, ox : ox + bw, bi] = tile
-        # little-endian on disk regardless of host order; strip payloads
-        # are compressed HERE, executor-side — the driver only streams
-        # ready bytes, same funnel shape as the uncompressed path
-        data = _compress_strip(
-            arr.astype(dt.newbyteorder("<"), copy=False).tobytes(), tiff_compression
-        )
+        # strip payloads are compressed HERE, executor-side — the driver
+        # only streams ready bytes
+        data = _segment_bytes(arr, tiff_compression)
         return pd.DataFrame({"strip": [int(qy) - y0], "data": [data]})
 
     strips = (
-        src.where(
-            (F.col("qb_x").between(x0, x1)) & (F.col("qb_y").between(y0, y1))
-        )
+        qb.with_tile(df.where(F.col("block") != 0), "block")
+        .where((F.col("qb_x").between(x0, x1)) & (F.col("qb_y").between(y0, y1)))
         .transform(lambda d: pin_group_width(
             d, "qb_y",
-            approx_pixels=n_strips * n_tiles_x * bw * bh * nbands,
+            approx_pixels=info["n_tiles"] * bw * bh * nbands,
         ))
         .groupBy("qb_y")
         .applyInPandas(assemble, schema="strip bigint, data binary")
     )
-
-    tile_m = 2.0 * _ORIGIN_SHIFT / (1 << z)  # tile size in mercator meters
-    info = {
-        "width": width,
-        "height": n_strips * bh,
-        "n_strips": n_strips,
-        "rows_per_strip": bh,
-        "nbands": nbands,
-        "band_type": btype,
-        "nodata": nodata,
-        "ulx": -_ORIGIN_SHIFT + x0 * tile_m,
-        "uly": _ORIGIN_SHIFT - y0 * tile_m,
-        "xres": tile_m / bw,
-        "yres": tile_m / bh,
-        "fill": fill,
-    }
     return strips, info
+
+
+def _tile_payload_table(
+    df: DataFrame,
+    metadata: dict,
+    extent: tuple[int, int, int, int],
+    bands: list[str] | None,
+    tiff_compression: str | None,
+) -> DataFrame:
+    """One row per present tile: (idx, data) where idx is the row-major
+    position in the covering tile grid and data is the compressed
+    pixel-interleaved TIFF tile payload. MAP-ONLY: RaQuet blocks map
+    1:1 to TIFF tiles, so unlike the strip path there is no assembly
+    shuffle at all."""
+    from raquet_spark.session import ensure_package_shipped
+
+    ensure_package_shipped(df.sparkSession)
+    binfo = _select_bands(metadata, bands)
+    t = metadata["tiling"]
+    npix = t["block_width"] * t["block_height"]
+    dt = np.dtype(DTYPES[binfo[0][1]])
+    x0, y0, x1, y1 = extent
+    ntx = x1 - x0 + 1
+
+    def encode(batches):
+        for pdf in batches:
+            idxs, blobs = [], []
+            for row in pdf.to_dict("records"):
+                arr = np.empty((npix, len(binfo)), dtype=dt)
+                for bi, (name, bt, _) in enumerate(binfo):
+                    arr[:, bi] = decode_block(row[name], bt)
+                idxs.append(
+                    (int(row["qb_y"]) - y0) * ntx + (int(row["qb_x"]) - x0)
+                )
+                blobs.append(_segment_bytes(arr, tiff_compression))
+            yield pd.DataFrame({"idx": idxs, "data": blobs})
+
+    return (
+        qb.with_tile(df.where(F.col("block") != 0), "block")
+        .where((F.col("qb_x").between(x0, x1)) & (F.col("qb_y").between(y0, y1)))
+        .mapInPandas(encode, schema="idx bigint, data binary")
+    )
+
+
+def _ordered_segments(
+    segments: DataFrame, key: str, n: int, fill: bytes
+) -> Iterator[bytes]:
+    """Payloads ``0 .. n-1`` in file order: each ``segments`` row's
+    ``data`` at its ``key`` index, ``fill`` for every index no row
+    carries (tile rows / tiles absent from the data).
+
+    ``prefetchPartitions=True`` overlaps independent jobs:
+    toLocalIterator runs one fetch job per result partition; with
+    prefetch the NEXT partition's fetch/sort runs while the driver
+    writes the current one's payloads, instead of strictly alternating
+    compute→write→compute. Partitions arrive in order, so the bytes are
+    unchanged; the driver buffers at most one extra partition."""
+    expected = 0
+    for row in segments.orderBy(key).toLocalIterator(prefetchPartitions=True):
+        yield from itertools.repeat(fill, row[key] - expected)
+        yield bytes(row["data"])
+        expected = row[key] + 1
+    yield from itertools.repeat(fill, n - expected)
 
 
 def _ifd_entry(tag: int, typ: int, count: int, value_or_offset: int) -> bytes:
@@ -304,59 +485,15 @@ def write_geotiff(
     strips. The IFD chain is written after the pixel data, so strip
     sizes may vary (compression) without driver buffering. Parity
     target: /root/reference/raquet/raquet2geotiff.py:84-277."""
-    import copy
-
-    if metadata.get("band_layout") == "interleaved":
-        # BIP pixels column → per-band columns first (map-only)
-        from raquet_spark.operators.layout import to_sequential
-
-        df, metadata = to_sequential(df, metadata, compression=None)
-    comp_tag = _COMP_TAG[compression]
-    z = metadata["tiling"]["max_zoom"]
-    zoom_col = F.expr(qb.cell_to_zoom_sql("block", "spark"))
-    base = df.where(F.col("block") != 0).withColumn("_z", zoom_col)
-
-    levels = [z]
-    if include_overviews:
-        # one tiny distinct over tile keys; RaQuet stores the pyramid in
-        # the same table, so lower zooms are the overview levels
-        avail = sorted(
-            {int(r["_z"]) for r in base.select("_z").distinct().collect()},
-            reverse=True,
-        )
-        levels += [lv for lv in avail if lv < z]
-
-    # main-level tile extent anchors every overview level (>> shift), so
-    # all levels cover the same geographic window
-    main = base.where(F.col("_z") == z).drop("_z")
-    ext_row = qb.with_tile(main, "block").agg(
-        F.min("qb_x"), F.min("qb_y"), F.max("qb_x"), F.max("qb_y")
-    ).first()
-    if ext_row is None or ext_row[0] is None:
-        raise ValueError("no tiles at max zoom to export")
-    x0, y0, x1, y1 = (int(v) for v in ext_row)
-
-    per_level: list[dict] = []
-    for lv in levels:
-        dz = z - lv
-        meta_lv = copy.deepcopy(metadata)
-        meta_lv["tiling"]["max_zoom"] = lv
-        lv_df = base.where(F.col("_z") == lv).drop("_z")
-        strips_df, info = strip_table(
-            lv_df,
-            meta_lv,
-            bands,
-            extent=(x0 >> dz, y0 >> dz, x1 >> dz, y1 >> dz),
-            tiff_compression=compression,
-        )
-        per_level.append({"level": lv, "strips": strips_df, "info": info})
-
+    metadata, plan = _export_plan(
+        df, metadata, bands, compression, include_overviews
+    )
     if compression is None:
-        total = 8
-        for pl in per_level:
-            i = pl["info"]
-            dt = np.dtype(DTYPES[i["band_type"]])
-            total += i["n_strips"] * i["rows_per_strip"] * i["width"] * i["nbands"] * dt.itemsize
+        total = 8 + sum(
+            lv.info["height"] * lv.info["width"] * lv.info["nbands"]
+            * np.dtype(DTYPES[lv.info["band_type"]]).itemsize
+            for lv in plan
+        )
         if total > 0xFFFFFFFF:
             # classic TIFF stores 32-bit offsets; fail fast BEFORE
             # streaming strips, not with a struct.error over a
@@ -366,179 +503,76 @@ def write_geotiff(
                 "4GB offset limit; export a lower zoom or a band subset"
             )
 
-    try:
-        _write_singlefile_body(
-            path, per_level, metadata, comp_tag, compression
+    levels = [
+        (
+            lv.info,
+            _ordered_segments(
+                strip_table(lv.df, lv.metadata, lv.extent, bands, compression)[0],
+                "strip", lv.info["n_strips"], lv.fill,
+            ),
         )
+        for lv in plan
+    ]
+    try:
+        _write_singlefile_body(path, levels, metadata, _COMP_TAG[compression])
     except BaseException:
         # the compressed path can only discover the 4GB classic-TIFF
-        # limit mid-stream (inside put()); don't leave a truncated .tif
+        # limit mid-stream; don't leave a truncated .tif
         with contextlib.suppress(OSError):
             os.unlink(path)
         raise
 
-    info = per_level[0]["info"]
+    info = dict(plan[0].info)
     if include_overviews:
-        info["overviews"] = [
-            {"level": pl["level"], **pl["info"]} for pl in per_level[1:]
-        ]
+        info["overviews"] = [{"level": lv.level, **lv.info} for lv in plan[1:]]
     return info
 
 
 def _write_singlefile_body(
     path: str,
-    per_level: list[dict],
+    levels: list[tuple[dict, Iterable[bytes]]],
     metadata: dict,
     comp_tag: int,
-    compression: str | None,
 ) -> None:
+    """Write one striped TIFF: each level's strips in order, then the
+    chained IFDs (primary, then one reduced-resolution IFD per further
+    level) — the IFDs go last, so compressed strip sizes need no
+    buffering."""
     with open(path, "wb") as f:
         f.write(b"II*\x00" + struct.pack("<I", 0))  # IFD offset patched below
         pos = 8
-
-        for pl in per_level:
-            info = pl["info"]
-            dt = np.dtype(DTYPES[info["band_type"]])
+        layout = []
+        for info, segments in levels:
             strip_size = (
-                info["rows_per_strip"] * info["width"] * info["nbands"] * dt.itemsize
-            )
-            fill_strip = _compress_strip(
-                np.full(
-                    info["rows_per_strip"] * info["width"] * info["nbands"],
-                    info["fill"],
-                    dtype=dt,
-                )
-                .astype(dt.newbyteorder("<"), copy=False)
-                .tobytes(),
-                compression,
+                info["rows_per_strip"] * info["width"] * info["nbands"]
+                * np.dtype(DTYPES[info["band_type"]]).itemsize
             )
             offsets: list[int] = []
             counts: list[int] = []
-
-            def put(data: bytes) -> None:
-                nonlocal pos
+            for data in segments:
                 if pos + len(data) > 0xFFFFFFFF:
                     raise ValueError(
                         "compressed raster payload exceeds the classic-TIFF "
                         "4GB offset limit; export a lower zoom or band subset"
                     )
+                assert comp_tag != 1 or len(data) == strip_size
                 offsets.append(pos)
                 counts.append(len(data))
                 f.write(data)
                 pos += len(data)
+            layout.append((info, offsets, counts))
 
-            expected = 0
-            n_strips = info["n_strips"]
-            # prefetchPartitions=True (r18, guide §2.6 "overlap
-            # independent jobs"): toLocalIterator runs one fetch job
-            # per result partition; with prefetch the NEXT partition's
-            # fetch/sort runs while the driver streams the current
-            # one's strips to disk, instead of strictly alternating
-            # compute→write→compute. Order is unchanged (partitions
-            # arrive in order) so the file is byte-identical; the
-            # driver buffers at most one extra partition of strips.
-            for row in pl["strips"].orderBy("strip").toLocalIterator(
-                prefetchPartitions=True
-            ):
-                while expected < row["strip"]:  # tile rows with no tiles
-                    put(fill_strip)
-                    expected += 1
-                data = bytes(row["data"])
-                if compression is None:
-                    assert len(data) == strip_size
-                put(data)
-                expected += 1
-            while expected < n_strips:
-                put(fill_strip)
-                expected += 1
-            pl["offsets"], pl["counts"] = offsets, counts
-
-        # --- chained IFDs (primary, then one per overview level) -------
         first_ifd = pos
-        all_entries = [
-            _level_entries(
-                pl["info"], metadata, comp_tag, pl["offsets"], pl["counts"],
-                is_overview=(k > 0),
+        for k, (info, offsets, counts) in enumerate(layout):
+            entries = _level_entries(
+                info, metadata, comp_tag, offsets, counts, is_overview=(k > 0)
             )
-            for k, pl in enumerate(per_level)
-        ]
-        for k, entries in enumerate(all_entries):
-            next_ifd = (
-                pos + _ifd_size(entries) if k + 1 < len(all_entries) else 0
-            )
+            next_ifd = pos + _ifd_size(entries) if k + 1 < len(layout) else 0
             ifd = _pack_ifd(entries, pos, next_ifd)
             f.write(ifd)
             pos += len(ifd)
         f.seek(4)
         f.write(struct.pack("<I", first_ifd))
-
-
-def _tile_payload_table(
-    df: DataFrame,
-    metadata: dict,
-    bands: list[str] | None,
-    extent: tuple[int, int, int, int],
-    tiff_compression: str | None,
-) -> tuple[DataFrame, dict]:
-    """One row per present tile: (idx, data) where idx is the row-major
-    position in the covering tile grid and data is the compressed
-    pixel-interleaved TIFF tile payload. MAP-ONLY: RaQuet blocks map
-    1:1 to TIFF tiles, so unlike the strip path there is no assembly
-    shuffle at all."""
-    from raquet_spark.session import ensure_package_shipped
-
-    ensure_package_shipped(df.sparkSession)
-    t = metadata["tiling"]
-    bw, bh = t["block_width"], t["block_height"]
-    binfo = [
-        (b["name"], b["type"], parse_nodata(b.get("nodata")))
-        for b in metadata["bands"]
-        if bands is None or b["name"] in bands
-    ]
-    btypes = {bt for _, bt, _ in binfo}
-    if len(btypes) > 1:
-        raise ValueError(f"mixed band types not supported in one TIFF: {btypes}")
-    btype = binfo[0][1]
-    dt = np.dtype(DTYPES[btype])
-    x0, y0, x1, y1 = extent
-    ntx = x1 - x0 + 1
-
-    src = qb.with_tile(df.where(F.col("block") != 0), "block").where(
-        (F.col("qb_x").between(x0, x1)) & (F.col("qb_y").between(y0, y1))
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            idxs, blobs = [], []
-            for row in pdf.to_dict("records"):
-                arr = np.empty((bh * bw, len(binfo)), dtype=dt)
-                for bi, (name, bt, _) in enumerate(binfo):
-                    arr[:, bi] = decode_block(row[name], bt)
-                data = _compress_strip(
-                    arr.astype(dt.newbyteorder("<"), copy=False).tobytes(),
-                    tiff_compression,
-                )
-                idxs.append(
-                    (int(row["qb_y"]) - y0) * ntx + (int(row["qb_x"]) - x0)
-                )
-                blobs.append(data)
-            yield pd.DataFrame({"idx": idxs, "data": blobs})
-
-    payloads = src.mapInPandas(encode, schema="idx bigint, data binary")
-    nodata = binfo[0][2]
-    fill = 0 if nodata is None else nodata
-    info = {
-        "width": ntx * bw,
-        "height": (y1 - y0 + 1) * bh,
-        "tile_width": bw,
-        "tile_height": bh,
-        "n_tiles": ntx * (y1 - y0 + 1),
-        "nbands": len(binfo),
-        "band_type": btype,
-        "nodata": nodata,
-        "fill": fill,
-    }
-    return payloads, info
 
 
 def write_geotiff_cog(
@@ -562,107 +596,51 @@ def write_geotiff_cog(
     header/IFDs are written; the driver then streams ready bytes in
     order. Single-file output is still a driver IO funnel — use
     :func:`write_geotiff_sharded` when even that is too much."""
-    import copy
-    import os
     import shutil
     import tempfile
 
-    if metadata.get("band_layout") == "interleaved":
-        from raquet_spark.operators.layout import to_sequential
-
-        df, metadata = to_sequential(df, metadata, compression=None)
+    metadata, plan = _export_plan(
+        df, metadata, bands, compression, include_overviews, tiled=True
+    )
     comp_tag = _COMP_TAG[compression]
-    z = metadata["tiling"]["max_zoom"]
-    zoom_col = F.expr(qb.cell_to_zoom_sql("block", "spark"))
-    base = df.where(F.col("block") != 0).withColumn("_z", zoom_col)
-
-    levels = [z]
-    if include_overviews:
-        avail = sorted(
-            {int(r["_z"]) for r in base.select("_z").distinct().collect()},
-            reverse=True,
-        )
-        levels += [lv for lv in avail if lv < z]
-
-    main = base.where(F.col("_z") == z).drop("_z")
-    ext_row = qb.with_tile(main, "block").agg(
-        F.min("qb_x"), F.min("qb_y"), F.max("qb_x"), F.max("qb_y")
-    ).first()
-    if ext_row is None or ext_row[0] is None:
-        raise ValueError("no tiles at max zoom to export")
-    x0, y0, x1, y1 = (int(v) for v in ext_row)
-
+    spark = df.sparkSession
     stage = tempfile.mkdtemp(prefix="cog_stage_")
     try:
-        per_level = []
-        for lv in levels:
-            dz = z - lv
-            meta_lv = copy.deepcopy(metadata)
-            meta_lv["tiling"]["max_zoom"] = lv
-            payloads, info = _tile_payload_table(
-                base.where(F.col("_z") == lv).drop("_z"),
-                meta_lv,
-                bands,
-                (x0 >> dz, y0 >> dz, x1 >> dz, y1 >> dz),
-                compression,
-            )
-            lv_dir = os.path.join(stage, f"z{lv}")
+        dirs, counts = [], []
+        for lv in plan:
+            lv_dir = os.path.join(stage, f"z{lv.level}")
             # distributed encode happens ONCE, into the stage files
-            payloads.write.parquet(lv_dir)
-            spark = df.sparkSession
-            staged = spark.read.parquet(lv_dir)
+            _tile_payload_table(
+                lv.df, lv.metadata, lv.extent, bands, compression
+            ).write.parquet(lv_dir)
             sizes = {
                 int(r["idx"]): int(r["n"])
-                for r in staged.select("idx", F.length("data").alias("n")).collect()
+                for r in spark.read.parquet(lv_dir)
+                .select("idx", F.length("data").alias("n"))
+                .collect()
             }
-            dt = np.dtype(DTYPES[info["band_type"]])
-            fill_payload = _compress_strip(
-                np.full(
-                    info["tile_width"] * info["tile_height"] * info["nbands"],
-                    info["fill"],
-                    dtype=dt,
-                )
-                .astype(dt.newbyteorder("<"), copy=False)
-                .tobytes(),
-                compression,
+            dirs.append(lv_dir)
+            counts.append(
+                [sizes.get(i, len(lv.fill)) for i in range(lv.info["n_tiles"])]
             )
-            tile_m = 2.0 * _ORIGIN_SHIFT / (1 << lv)
-            info["ulx"] = -_ORIGIN_SHIFT + (x0 >> dz) * tile_m
-            info["uly"] = _ORIGIN_SHIFT - (y0 >> dz) * tile_m
-            info["xres"] = tile_m / info["tile_width"]
-            info["yres"] = tile_m / info["tile_height"]
-            per_level.append({
-                "level": lv,
-                "dir": lv_dir,
-                "info": info,
-                "sizes": sizes,
-                "fill": fill_payload,
-                "counts": [
-                    sizes.get(i, len(fill_payload)) for i in range(info["n_tiles"])
-                ],
-            })
 
         # ---- compute layout: header, IFD chain, then data (overviews
         # lowest-resolution first, full resolution last — COG order) ----
-        data_order = list(reversed(per_level))  # smallest zoom first
-        all_entries = []
-        # provisional entries to size the IFD chain (offsets patched after)
-        for k, pl in enumerate(per_level):
-            zeros = [0] * pl["info"]["n_tiles"]
-            all_entries.append(_level_entries(
-                pl["info"], metadata, comp_tag, zeros, pl["counts"],
+        data_order = list(reversed(range(len(plan))))  # smallest zoom first
+        # provisional entries size the IFD chain (offsets patched after)
+        ifd_sizes = [
+            _ifd_size(_level_entries(
+                lv.info, metadata, comp_tag, [0] * len(counts[k]), counts[k],
                 is_overview=(k > 0), tiled=True,
             ))
-        ifd_start = 8
-        ifd_sizes = [_ifd_size(e) for e in all_entries]
-        data_start = ifd_start + sum(ifd_sizes)
-        pos = data_start
-        for pl in data_order:
-            offs = []
-            for n in pl["counts"]:
-                offs.append(pos)
+            for k, lv in enumerate(plan)
+        ]
+        pos = 8 + sum(ifd_sizes)
+        offsets: list[list[int]] = [[] for _ in plan]
+        for k in data_order:
+            for n in counts[k]:
+                offsets[k].append(pos)
                 pos += n
-            pl["offsets"] = offs
         if pos > 0xFFFFFFFF:
             raise ValueError(
                 "COG payload exceeds the classic-TIFF 4GB offset limit; "
@@ -670,43 +648,30 @@ def write_geotiff_cog(
             )
 
         with open(path, "wb") as f:
-            f.write(b"II*\x00" + struct.pack("<I", ifd_start))
-            ifd_pos = ifd_start
-            for k, pl in enumerate(per_level):
+            f.write(b"II*\x00" + struct.pack("<I", 8))
+            ifd_pos = 8
+            for k, lv in enumerate(plan):
                 entries = _level_entries(
-                    pl["info"], metadata, comp_tag, pl["offsets"], pl["counts"],
+                    lv.info, metadata, comp_tag, offsets[k], counts[k],
                     is_overview=(k > 0), tiled=True,
                 )
-                next_ifd = (
-                    ifd_pos + ifd_sizes[k] if k + 1 < len(per_level) else 0
-                )
+                next_ifd = ifd_pos + ifd_sizes[k] if k + 1 < len(plan) else 0
                 ifd = _pack_ifd(entries, ifd_pos, next_ifd)
                 assert len(ifd) == ifd_sizes[k]
                 f.write(ifd)
                 ifd_pos += len(ifd)
-            for pl in data_order:
-                spark = df.sparkSession
-                staged = spark.read.parquet(pl["dir"])
-                expected = 0
-                # prefetch: overlap the next partition's fetch with the
-                # driver's write of the current one (see write_geotiff)
-                for row in staged.orderBy("idx").toLocalIterator(
-                    prefetchPartitions=True
+            for k in data_order:
+                staged = spark.read.parquet(dirs[k])
+                for data in _ordered_segments(
+                    staged, "idx", plan[k].info["n_tiles"], plan[k].fill
                 ):
-                    while expected < row["idx"]:
-                        f.write(pl["fill"])
-                        expected += 1
-                    f.write(bytes(row["data"]))
-                    expected += 1
-                while expected < pl["info"]["n_tiles"]:
-                    f.write(pl["fill"])
-                    expected += 1
+                    f.write(data)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
-    info = dict(per_level[0]["info"])
+    info = dict(plan[0].info)
     info["cog"] = True
-    info["levels"] = [pl["level"] for pl in per_level]
+    info["levels"] = [lv.level for lv in plan]
     return info
 
 
@@ -718,8 +683,10 @@ def write_geotiff_sharded(
     compression: str | None = None,
     rows_per_shard: int = 4,
 ) -> dict:
-    """Sharded GeoTIFF export: one complete, georeferenced GeoTIFF per
-    group of ``rows_per_shard`` tile rows, written EXECUTOR-side.
+    """Sharded GeoTIFF export of the max-zoom tiles: one complete,
+    georeferenced GeoTIFF per group of ``rows_per_shard`` tile rows,
+    written EXECUTOR-side. The shards concatenate (top to bottom) to the
+    single-file :func:`write_geotiff` raster.
 
     This is the scale path the single-file :func:`write_geotiff` cannot
     be: that writer must stream every strip through the driver because
@@ -737,30 +704,13 @@ def write_geotiff_sharded(
     width × dtype). Tile rows with no tiles inside a covered shard are
     nodata-filled; shard groups with no tiles at all are skipped
     entirely (sparse output — the index records what exists)."""
-    import os
-
-    from raquet_spark.session import ensure_package_shipped
-
-    ensure_package_shipped(df.sparkSession)
-    if metadata.get("band_layout") == "interleaved":
-        from raquet_spark.operators.layout import to_sequential
-
-        df, metadata = to_sequential(df, metadata, compression=None)
+    metadata, (lv,) = _export_plan(df, metadata, bands, compression)
     os.makedirs(out_dir, exist_ok=True)
     comp_tag = _COMP_TAG[compression]
     # strip payloads (already executor-compressed) keyed by tile row
-    strips_df, info = strip_table(df, metadata, bands, tiff_compression=compression)
-    dt = np.dtype(DTYPES[info["band_type"]])
-    bh = info["rows_per_strip"]
-    fill_strip = _compress_strip(
-        np.full(bh * info["width"] * info["nbands"], info["fill"], dtype=dt)
-        .astype(dt.newbyteorder("<"), copy=False)
-        .tobytes(),
-        compression,
-    )
-    n_strips = info["n_strips"]
-    meta_bands = metadata
-    base_info = dict(info)
+    strips_df, _ = strip_table(lv.df, lv.metadata, lv.extent, bands, compression)
+    info, fill_strip = lv.info, lv.fill
+    bh, n_strips = info["rows_per_strip"], info["n_strips"]
 
     def write_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (shard,) = key
@@ -768,27 +718,14 @@ def write_geotiff_sharded(
         rows = min(rows_per_shard, n_strips - row0)
         by_strip = {int(r["strip"]): bytes(r["data"]) for r in pdf.to_dict("records")}
         path = os.path.join(out_dir, f"shard-{row0:05d}-{row0 + rows - 1:05d}.tif")
-        sinfo = dict(base_info)
-        sinfo["height"] = rows * bh
-        sinfo["n_strips"] = rows
-        sinfo["uly"] = base_info["uly"] - row0 * bh * base_info["yres"]
-        offsets: list[int] = []
-        counts: list[int] = []
-        with open(path, "wb") as f:
-            f.write(b"II*\x00" + struct.pack("<I", 0))
-            pos = 8
-            for i in range(rows):
-                data = by_strip.get(row0 + i, fill_strip)
-                offsets.append(pos)
-                counts.append(len(data))
-                f.write(data)
-                pos += len(data)
-            entries = _level_entries(
-                sinfo, meta_bands, comp_tag, offsets, counts, is_overview=False
-            )
-            f.write(_pack_ifd(entries, pos, 0))
-            f.seek(4)
-            f.write(struct.pack("<I", pos))
+        sinfo = dict(
+            info,
+            height=rows * bh,
+            n_strips=rows,
+            uly=info["uly"] - row0 * bh * info["yres"],
+        )
+        segments = (by_strip.get(row0 + i, fill_strip) for i in range(rows))
+        _write_singlefile_body(path, [(sinfo, segments)], metadata, comp_tag)
         return pd.DataFrame({
             "shard": [int(shard)],
             "path": [path],

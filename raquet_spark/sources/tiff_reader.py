@@ -1201,53 +1201,6 @@ def _lonlat_steps(info: dict) -> tuple[list[tuple[str, str]], str, str]:
     raise NotImplementedError(f"CRS EPSG:{info['epsg']}")
 
 
-def nearest_warp(
-    px: DataFrame,
-    z: int,
-    block_size: int,
-    band_cols: list[str],
-    extra_keys: tuple[str, ...] = (),
-) -> DataFrame:
-    """Forward-map nearest-neighbor warp: source samples carrying
-    mercator positions (``_mx``/``_my`` columns plus ``sx``/``sy``
-    indices) → one row per covered target pixel ``(gx, gy, bands...)``
-    at zoom ``z``. ONE shuffle (the argmin groupBy on the target pixel
-    key). ``extra_keys`` become extra group keys (e.g. ``time_cf`` for
-    time-dimension rasters — every step warps in the same pass)."""
-    world = float((1 << z) * block_size)
-    mx, my = "_mx", "_my"
-    # target global pixel coordinates (gx, gy) at zoom z
-    gx = f"CAST(floor(({mx} + {_ORIGIN_SHIFT}) / {2.0 * _ORIGIN_SHIFT} * {world}) AS BIGINT)"
-    gy = f"CAST(floor(({_ORIGIN_SHIFT} - {my}) / {2.0 * _ORIGIN_SHIFT} * {world}) AS BIGINT)"
-    # distance of the source sample's mercator position from the target
-    # pixel center, for the nearest-neighbor argmin
-    cx = f"((CAST({gx} AS DOUBLE) + 0.5) / {world} * {2.0 * _ORIGIN_SHIFT} - {_ORIGIN_SHIFT})"
-    cy = f"({_ORIGIN_SHIFT} - (CAST({gy} AS DOUBLE) + 0.5) / {world} * {2.0 * _ORIGIN_SHIFT})"
-    dist = f"(pow({mx} - {cx}, 2) + pow({my} - {cy}, 2))"
-
-    mapped = px.selectExpr(
-        f"{gx} AS gx",
-        f"{gy} AS gy",
-        *extra_keys,
-        f"{dist} AS _d",
-        "sx",
-        "sy",
-        *band_cols,
-    ).where(f"gx >= 0 AND gx < {int(world)} AND gy >= 0 AND gy < {int(world)}")
-
-    # nearest source sample per target pixel; (sx, sy) tiebreak makes the
-    # warp deterministic when two samples are equidistant
-    pick = F.struct(
-        F.col("_d"), F.col("sy"), F.col("sx"),
-        *[F.col(b) for b in band_cols],
-    )
-    agg = mapped.groupBy("gx", "gy", *extra_keys).agg(F.min(pick).alias("_best"))
-    return agg.select(
-        "gx", "gy", *extra_keys,
-        *[F.col(f"_best.{b}").alias(b) for b in band_cols],
-    )
-
-
 def _forward_steps(info: dict) -> tuple[list[tuple[str, str]], str, str]:
     """(column bindings, x_expr, y_expr): the source-CRS FORWARD
     projection (lon/lat degrees in ``_lon``/``_lat`` columns → projected

@@ -512,26 +512,6 @@ def test_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
-@pytest.mark.slow
-def test_checkpointed_pair_builders_match_sql(spark):
-    """The large-scale entry points (checkpointed band/chunk/gram
-    tables) must return exactly the SQL-template results."""
-    from raquet_spark import queries as Q
-
-    sf = "/root/testdata/sf0.001"
-    Q.register_views(spark, sf)
-    for df_fn, sql_fn in [
-        (Q.dedup_minhash_pairs_df, Q.dedup_minhash),
-        (Q.dedup_simhash_pairs_df, Q.dedup_simhash),
-        (Q.ngram_jaccard_pairs_df, Q.ngram_jaccard),
-    ]:
-        got = df_fn(spark, sf)
-        want = spark.sql(sql_fn("spark"))
-        assert got.columns == want.columns, sql_fn.__name__
-        assert got.exceptAll(want).count() == 0, sql_fn.__name__
-        assert want.exceptAll(got).count() == 0, sql_fn.__name__
-
-
 def test_embedding_lsh_recall_vs_exact(spark):
     """The LSH-bucketed embedding dedup (the 100 TB path) must recover
     nearly all of the exact all-pairs result at the query threshold."""

@@ -259,6 +259,44 @@ def test_geotiff_sharded_matches_single_file(spark, raster, tmp_path):
     np.testing.assert_array_equal(np.concatenate(parts, axis=0), a_single)
 
 
+def test_geotiff_sharded_pyramid_exports_max_zoom(spark, raster, tmp_path):
+    """A pyramid table (native tiles + overview levels) exports only its
+    max zoom through the sharded writer, exactly like the single-file
+    writer: the shards concatenate to the single-file raster."""
+    from raquet_spark.operators.pyramid import build_pyramid
+    from raquet_spark.sources.geotiff import write_geotiff_sharded
+
+    tiles, meta = raster
+    pyr, pmeta = build_pyramid(tiles, meta, 4)
+    single = str(tmp_path / "single.tif")
+    write_geotiff(pyr, pmeta, single)
+    a_single, _ = read_geotiff(single)
+    assert a_single.shape == (32, 48, 1)
+
+    info = write_geotiff_sharded(
+        pyr, pmeta, str(tmp_path / "shards"), rows_per_shard=1
+    )
+    assert (info["width"], info["height"]) == (48, 32)
+    parts = [read_geotiff(sh["path"])[0] for sh in info["shards"]]
+    np.testing.assert_array_equal(np.concatenate(parts, axis=0), a_single)
+
+
+def test_geotiff_writers_empty_input_error(spark, raster, tmp_path):
+    """Every writer rejects a table with no max-zoom tiles with the same
+    named error."""
+    from raquet_spark.sources.geotiff import write_geotiff_cog, write_geotiff_sharded
+
+    tiles, meta = raster
+    empty = tiles.where("block = 0")
+    for write, out in [
+        (write_geotiff, "e.tif"),
+        (write_geotiff_cog, "e_cog.tif"),
+        (write_geotiff_sharded, "e_shards"),
+    ]:
+        with pytest.raises(ValueError, match="no tiles at max zoom to export"):
+            write(empty, meta, str(tmp_path / out))
+
+
 def test_geotiff_cog_layout_and_roundtrip(spark, tmp_path):
     """COG export: tiled IFDs at the file head, overview data before
     full-res data, blocks map 1:1 to TIFF tiles; re-ingest through the

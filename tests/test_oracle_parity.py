@@ -136,3 +136,35 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert "parent" in df.columns
+
+
+def test_every_query_builder_is_registered():
+    """Every ``*_spark`` / ``*_df`` builder defined in queries.py is
+    reachable from a ``queries()`` entry (registered itself, or called by
+    a registered builder): unregistered alternative renderings are dead
+    code the oracle gate never exercises."""
+    import ast
+    import inspect
+
+    from raquet_spark import queries as Q
+
+    tree = ast.parse(inspect.getsource(Q))
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    todo = []
+    for fn in Q.queries().values():
+        todo.append(fn.__name__)
+        # SQL entries are ``_sql_query`` closures over the template
+        todo += [
+            v.__name__
+            for v in inspect.getclosurevars(fn).nonlocals.values()
+            if callable(v)
+        ]
+    reached: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name in reached or name not in funcs:
+            continue
+        reached.add(name)
+        todo += [n.id for n in ast.walk(funcs[name]) if isinstance(n, ast.Name)]
+    builders = {n for n in funcs if n.endswith(("_spark", "_df"))}
+    assert sorted(builders - reached) == []

@@ -237,7 +237,7 @@ def test_geotiff_strip_assembly_single_shuffle(spark):
         spark, zoom=5, tiles_x=2, tiles_y=2, origin_x=4, origin_y=6,
         block_size=8,
     )
-    strips, _ = strip_table(tiles, meta, extent=(4, 6, 5, 7))
+    strips, _ = strip_table(tiles, meta, (4, 6, 5, 7))
     assert count_exchanges(strips) == 1
 
 
@@ -432,7 +432,7 @@ def test_sharded_export_strip_plan_single_shuffle(spark):
         spark, zoom=6, tiles_x=2, tiles_y=2, origin_x=16, origin_y=20,
         block_size=16, dtype="float32",
     )
-    strips, _ = strip_table(tiles, meta, tiff_compression="deflate")
+    strips, _ = strip_table(tiles, meta, (16, 20, 17, 21), tiff_compression="deflate")
     assert count_exchanges(strips) == 1
 
 
@@ -935,6 +935,16 @@ def test_hashed_embeddings_carry_keeps_hash_aggregate(spark):
     rows = feats.select("doc_id", "y", "source").collect()
     assert len(rows) == 20
     assert {r["source"] for r in rows} == {"src0", "src1", "src2"}
+
+
+@pytest.mark.parametrize("name", ["rasterize_wkt_stats", "raster_point_value"])
+def test_driver_built_query_inputs_are_local_relations(spark, qs, name):
+    """The small driver-built inputs of these queries (the WKT features,
+    the query points) come from pyarrow tables, so their plan leaves are
+    JVM LocalRelations — no LogicalRDD over a pickled Python RDD."""
+    plan = optimized_plan(qs[name](spark, SF_DIR))
+    assert "LocalRelation" in plan, plan
+    assert "LogicalRDD" not in plan, plan
 
 
 def test_quality_classifier_result_is_local_relation(spark, qs):

@@ -359,27 +359,74 @@ def test_align_upsample_roundtrip(spark):
 
 
 def test_blocked_pyramid_matches_per_level(spark):
-    """build_pyramid's k-levels-per-shuffle pass must be byte-identical
-    to sequential per-level builds."""
-    from raquet_spark.operators.pyramid import build_level
+    """build_level (one level per pass) and build_pyramid (three levels
+    per pass) both equal an independent numpy reference: the native
+    tiles decoded into one mosaic, downsampled level by level, sliced at
+    every parent some child row covers. The sparse grid leaves parents
+    with 1-3 children, and tile (70, 81) — alone under its z7 parent —
+    has a null band blob: the parent still exists, all fill."""
+    from raquet_spark.operators.pyramid import _downsample, build_level
 
+    z, bs, nd = 8, 32, -1.0
     tiles, meta = make_synthetic_raster(
-        spark, zoom=8, tiles_x=4, tiles_y=4, origin_x=64, origin_y=80,
-        block_size=32, num_bands=1, dtype="float32", nodata=-1.0,
+        spark, zoom=z, tiles_x=5, tiles_y=4, origin_x=66, origin_y=81,
+        block_size=bs, num_bands=1, dtype="float32", nodata=nd,
         nodata_every=11,
     )
-    tiles = tiles.localCheckpoint(True)
-    cur, want = tiles, {}
-    for z in range(8, 5, -1):
-        cur = build_level(cur, meta, z, "average").localCheckpoint(True)
-        for r in cur.collect():
-            want[r["block"]] = bytes(r["band_1"])
-    pyr, _ = build_pyramid(tiles, meta, min_zoom=5, resampling="average",
-                           levels_per_pass=3)
-    got = {r["block"]: bytes(r["band_1"])
-           for r in pyr.select("block", "band_1").collect()
-           if qb.py_cell_to_tile(r["block"])[2] < 8}
-    assert got == want
+    null_cell = qb.py_tile_to_cell(70, 81, z)
+    tiles = tiles.where(
+        f"block != {qb.py_tile_to_cell(67, 83, z)}"
+    ).withColumn(
+        "band_1",
+        F.when(F.col("block") == null_cell, F.lit(None).cast("binary"))
+        .otherwise(F.col("band_1")),
+    ).localCheckpoint(True)
+
+    # reference: one native mosaic over the z5-aligned extent, fill where
+    # no tile (or a null blob) supplies pixels
+    rows = tiles.collect()
+    cells = [qb.py_cell_to_tile(r["block"])[:2] for r in rows]
+    x0 = min(x for x, _ in cells) >> 3 << 3
+    y0 = min(y for _, y in cells) >> 3 << 3
+    n = ((max(x for x, _ in cells) >> 3) - (x0 >> 3) + 1) * 8
+    m = ((max(y for _, y in cells) >> 3) - (y0 >> 3) + 1) * 8
+    mosaic = np.full((m * bs, n * bs), nd, dtype="f4")
+    for (x, y), r in zip(cells, rows):
+        if r["band_1"] is not None:
+            mosaic[(y - y0) * bs:(y - y0 + 1) * bs, (x - x0) * bs:(x - x0 + 1) * bs] = (
+                decode_block(r["band_1"], "float32").reshape(bs, bs)
+            )
+    want = {}
+    for j in range(1, 4):
+        mosaic = _downsample(mosaic, "average", nd)
+        for px, py in {(x >> j, y >> j) for x, y in cells}:
+            ox, oy = px - (x0 >> j), py - (y0 >> j)
+            want[qb.py_tile_to_cell(px, py, z - j)] = (
+                mosaic[oy * bs:(oy + 1) * bs, ox * bs:(ox + 1) * bs].ravel()
+            )
+    assert qb.py_tile_to_cell(35, 40, z - 1) in want
+
+    def decoded(df):
+        return {
+            r["block"]: decode_block(r["band_1"], "float32")
+            for r in df.select("block", "band_1").collect()
+            if qb.py_cell_to_tile(r["block"])[2] < z
+        }
+
+    cur, per_level = tiles, []
+    for cz in range(z, z - 3, -1):
+        cur = build_level(cur, meta, cz, "average").localCheckpoint(True)
+        per_level.append(cur)
+    got_level = {}
+    for lv in per_level:
+        got_level.update(decoded(lv))
+    got_pyramid = decoded(
+        build_pyramid(tiles, meta, min_zoom=z - 3, resampling="average")[0]
+    )
+    for got in (got_level, got_pyramid):
+        assert got.keys() == want.keys()
+        for cell, arr in want.items():
+            np.testing.assert_array_equal(got[cell], arr)
 
 
 def test_clip_to_polygon_matches_region_stats(spark):

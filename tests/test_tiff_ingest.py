@@ -1139,48 +1139,6 @@ def test_forward_projections_invert_inverses(spark):
 
 
 @pytest.mark.slow
-def test_dense_near_projected_matches_forward_argmin(spark):
-    """Dense target-driven nearest on the Albers NLCD: fills at least as
-    many pixels as the old forward-map argmin and agrees with it on the
-    overwhelming majority of shared pixels (the two nearest definitions
-    differ only near cell boundaries)."""
-    from raquet_spark.sources.tiff_reader import (
-        _tile_aligned_bounds,
-        _lonlat_corners,
-        _pick_zoom,
-        _resampled_pixels,
-        nearest_warp,
-    )
-    import math as _m
-
-    path = f"{REF}/Annual_NLCD_LndCov_2023_CU_C1V0.tif"
-    info = read_tiff_structure(path)
-    z = _pick_zoom(info, 256, "upper")
-    px = tiff_pixel_table(spark, info)
-    _, ext = _tile_aligned_bounds(_lonlat_corners(info), z)
-    dense = _resampled_pixels(spark, px, info, z, 256, "near", ext).toPandas()
-
-    from raquet_spark.sources.tiff_reader import _lonlat_steps, _EARTH_R, _ORIGIN_SHIFT
-    steps, lon_e, lat_e = _lonlat_steps(info)
-    fpx = px
-    for n_, e_ in steps:
-        fpx = fpx.withColumn(n_, F.expr(e_))
-    fpx = (
-        fpx.withColumn("_lon", F.expr(lon_e))
-        .withColumn("_lat", F.expr(lat_e))
-        .withColumn("_mx", F.expr(f"_lon * {_m.pi / 180.0 * _EARTH_R}"))
-        .withColumn("_my", F.expr(
-            f"{_EARTH_R} * ln(tan({_m.pi / 4.0} + radians(_lat) / 2.0))"))
-    )
-    sparse = nearest_warp(fpx, z, 256, ["band_1"]).toPandas()
-
-    assert len(dense) >= len(sparse)
-    merged = dense.merge(sparse, on=["gx", "gy"], suffixes=("_d", "_s"))
-    agree = (merged["band_1_d"] == merged["band_1_s"]).mean()
-    assert agree > 0.9, agree
-
-
-@pytest.mark.slow
 def test_bilinear_projected_nlcd(spark):
     """Bilinear on the Albers NLCD (through the Snyder forward
     projection): runs target-driven, output dense, distribution tracks
