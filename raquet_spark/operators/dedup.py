@@ -566,22 +566,23 @@ def _components_driver_side(
     checkpoint + the convergence count, each a driver round-trip), so
     a TINY graph pays ~25 scheduler floors for microseconds of actual
     work — the measured 1.5-2.5 s on the bench's planted pair graphs.
-    When the materialized (already checkpointed, both-orientations)
-    edge list holds at most ``small_graph_edges`` rows AND its ids fit
-    a ~64 MB driver budget, collect it — the same bounded-collect
-    class as the BPE merge rows — and label components with
-    path-compressed union-find; label = min member, identical to the
-    loop's fixed point. Returns None when the graph is over either cap
+    When the (checkpointed, both-orientations) edge list holds at most
+    ``small_graph_edges`` rows AND its ids fit a ~64 MB driver budget,
+    collect it — the same bounded-collect class as the BPE merge rows
+    — and label components with path-compressed union-find; label =
+    min member, identical to the loop's fixed point. Returns None when the graph is over either cap
     (caller runs the distributed loop — the 100 TB path, unchanged).
 
     The cap probe also sums id bytes for string ids in the SAME single
     aggregation job (ADVICE r17), so a 200k-edge list of kilobyte URLs
     (the 'few MB' assumption broken) falls back to the distributed
-    loop instead of pressuring driver memory. Deliberately NOT
-    ``limit(cap+1)``-bounded: the edge list is already materialized
-    (checkpointed) so the scan is cached-block IO, while a global
-    limit funnels up to cap+1 rows through ONE task before counting —
-    measured 1.4 s slower on the bench graphs (r18)."""
+    loop instead of pressuring driver memory. The probe is the first
+    action over the lazily checkpointed edge list, so it also stores
+    the checkpoint's blocks: the edge plan runs once, and the collect
+    that follows reads those blocks with no shuffle stage. Deliberately
+    NOT ``limit(cap+1)``-bounded: a global limit funnels up to cap+1
+    rows through ONE task before counting — measured 1.4 s slower on
+    the bench graphs (r18)."""
     from pyspark.sql.types import StringType
 
     fields = e.schema.fields
@@ -679,12 +680,14 @@ def connected_components(
     production funnels (CLI, probe, pipeline demo) feed MATERIALIZED
     pairs and opt in explicitly.
 
-    ``small_graph_edges`` (r17): after the (distinct, both-orientation)
-    edge list materializes, a graph at or under this many edge ROWS is
-    labeled driver-side by union-find instead of the join loop — the
-    loop costs ~10 AQE stage-jobs PER ROUND regardless of data volume,
-    which is pure scheduler floor on a toy graph (measured: the bench
-    pair graphs spent 20+ of their 25 jobs there). The cap bounds the
+    ``small_graph_edges`` (r17): the (distinct, both-orientation) edge
+    list is a lazy local checkpoint, materialized by the first action
+    over it — the fast path's cap probe, else the loop's first round.
+    A graph at or under this many edge ROWS is labeled driver-side by
+    union-find instead of the join loop — the loop costs ~10 AQE
+    stage-jobs PER ROUND regardless of data volume, which is pure
+    scheduler floor on a toy graph (measured: the bench pair graphs
+    spent 20+ of their 25 jobs there). The cap bounds the
     collect at a few MB; pass 0 to force the distributed loop. Labels
     are identical by construction (component = min reachable node —
     the loop's fixed point and union-find's min-member are the same
@@ -743,7 +746,10 @@ def connected_components(
     big = width > base
     e_level = StorageLevel.DISK_ONLY if big else None
     with width_scope:
-        e = raw.distinct().localCheckpoint(eager=True, storageLevel=e_level)
+        # lazy: the first action over `e` (the fast path's cap probe,
+        # else the loop's first round) stores the blocks, so no job
+        # runs for the checkpoint alone
+        e = raw.distinct().localCheckpoint(eager=False, storageLevel=e_level)
         small = (_components_driver_side(e, small_graph_edges)
                  if small_graph_edges > 0 else None)
         if small is not None:

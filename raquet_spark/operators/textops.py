@@ -618,6 +618,45 @@ def _margin_expr(weights, vec_col: str) -> str:
     )
 
 
+#: driver budget of the local gradient-descent fast path: a dense
+#: feature matrix of at most this many bytes (n·dim·8) is collected once
+#: and fitted by :func:`_fit_local` instead of n_iter distributed jobs
+LOCAL_FIT_BYTES = 64 * 1024 * 1024
+
+
+def _arrow_xy(table, vec_col: str, y_col: str, dim: int):
+    """Dense float64 ``(X, y)`` from an Arrow table whose ``vec_col``
+    holds ``dim``-long lists: the flat list buffer reshaped, no
+    per-row Python objects."""
+    import numpy as np
+
+    flat = table.column(vec_col).combine_chunks().flatten()
+    if len(flat) != table.num_rows * dim:
+        raise ValueError(
+            f"{vec_col}: {len(flat)} values for {table.num_rows} rows of dim {dim}"
+        )
+    X = np.asarray(flat.to_numpy(zero_copy_only=False), dtype="f8")
+    y = np.asarray(table.column(y_col).to_numpy(), dtype="f8")
+    return X.reshape(table.num_rows, dim), y
+
+
+def _fit_local(X, y, n_iter: int, lr: float) -> list[float]:
+    """Full-batch logistic-regression gradient descent on the driver —
+    the update rule and iteration count of the distributed loop in
+    :func:`train_quality_classifier`, over one dense ``(n, dim)``
+    matrix."""
+    import numpy as np
+
+    n, dim = X.shape
+    if n == 0:
+        raise ValueError("empty training set")
+    w = np.zeros(dim)
+    for _ in range(n_iter):
+        p = 1.0 / (1.0 + np.exp(-(X @ w)))
+        w = w - lr * (X.T @ (p - y)) / n
+    return [float(v) for v in w]
+
+
 def train_quality_classifier(
     feats: DataFrame,
     labels: DataFrame | None,
@@ -651,11 +690,11 @@ def train_quality_classifier(
     join path remains for callers whose labels live in a separate
     table.
 
-    Small inputs (r18): when the dense feature matrix fits a 64 MB
-    driver budget (n·dim·8 bytes), the iterations run locally on one
-    Arrow collect instead of n_iter scheduled jobs — identical update
-    rule and iteration count, deterministic, distributed loop
-    unchanged above the cap."""
+    Small inputs (r18): when the dense feature matrix fits
+    :data:`LOCAL_FIT_BYTES` (n·dim·8 bytes), the iterations run
+    locally (:func:`_fit_local`) on one Arrow collect instead of n_iter
+    scheduled jobs — identical update rule and iteration count,
+    deterministic, distributed loop unchanged above the cap."""
     import numpy as np
     import pandas as pd
 
@@ -666,24 +705,16 @@ def train_quality_classifier(
         if n == 0:
             raise ValueError("empty training set")
         # Driver fast path (r18, the dedup_components small-graph
-        # precedent): below ~64 MB of dense features (n·dim·8 B) the
-        # n_iter sequential Spark jobs are pure scheduling overhead —
-        # collect (vec, y) ONCE through Arrow and run the identical
-        # full-batch GD locally. Same update formula, same iteration
-        # count; only float summation ORDER differs (one matmul vs
-        # per-partition partials), which the planted-margin safety
-        # (min |margin| ≥ 0.24 at n_iter=4) dwarfs. The distributed
-        # loop below is the 100 TB path and stays bit-for-bit as
-        # before; the cap is on the exact bytes the driver would hold.
-        if n * dim * 8 <= 64 * 1024 * 1024:
-            pdf = df.toPandas()
-            X = np.array(pdf[vec_col].tolist(), dtype="f8")
-            y = pdf[y_col].to_numpy(dtype="f8")
-            w = np.zeros(dim)
-            for _ in range(n_iter):
-                p = 1.0 / (1.0 + np.exp(-(X @ w)))
-                w = w - lr * (X.T @ (p - y)) / n
-            return [float(v) for v in w]
+        # precedent): below the budget the n_iter sequential Spark jobs
+        # are pure scheduling overhead. Only float summation ORDER
+        # differs from the loop below (one matmul vs per-partition
+        # partials), which the planted-margin safety (min |margin| ≥
+        # 0.24 at n_iter=4) dwarfs. The distributed loop is the 100 TB
+        # path and stays bit-for-bit as before; the cap is on the exact
+        # bytes the driver would hold.
+        if n * dim * 8 <= LOCAL_FIT_BYTES:
+            X, y = _arrow_xy(df.toArrow(), vec_col, y_col, dim)
+            return _fit_local(X, y, n_iter, lr)
         # 8 sequential scans: per-task overhead dominates when the
         # cached table is small, so coalesce to ~200k rows/task (reads
         # cached blocks, no recompute); at real scale parts >= current

@@ -38,20 +38,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     which Spark refuses by default. We read nanos as BIGINT
     (``nanosAsLong``) and truncate to microseconds — exactly what DuckDB
     does when it coerces TIMESTAMP_NS to TIMESTAMP, keeping the oracle
-    comparison bit-identical."""
+    comparison bit-identical.
+
+    The reader gets the schema from the parquet footer pyarrow already
+    reads (naive timestamps as TIMESTAMP_NTZ, nanos as the BIGINT
+    ``nanosAsLong`` yields — what Spark's own inference gives), so a
+    load launches no schema-inference job."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import LongType, StructField, StructType
 
     path = f"{sf_dir}/{name}.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    schema = pq.read_schema(path)
-    for field in schema:
-        if str(field.type) == "timestamp[ns]":
-            df = df.withColumn(
-                field.name,
-                F.expr(f"timestamp_micros(CAST({field.name} DIV 1000 AS BIGINT))"),
-            )
+    pq_schema = pq.read_schema(path)
+    nanos = [f.name for f in pq_schema if str(f.type) == "timestamp[ns]"]
+    schema = StructType([
+        StructField(f.name, LongType(), f.nullable) if f.name in nanos else f
+        for f in from_arrow_schema(pq_schema, prefer_timestamp_ntz=True).fields
+    ])
+    df = spark.read.schema(schema).parquet(path)
+    for col in nanos:
+        df = df.withColumn(
+            col, F.expr(f"timestamp_micros(CAST({col} DIV 1000 AS BIGINT))")
+        )
     return df
 
 
@@ -3671,63 +3681,40 @@ _QCF_SENT = {"pos": "qsentinelgood", "neg": "qsentinelbad"}
 def quality_classifier_filter_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality filtering (the classifier-filter step of
     public LLM pipelines — a linear scorer over hashed bag-of-words, the
-    fastText/DCLM/FineWeb-Edu recipe): TRAINS distributed full-batch
-    logistic regression (operators/textops.train_quality_classifier —
-    one map-only scan + one collected dim-row gradient per iteration)
-    and SCORES map-only. The driver gate plants a mirror-pair corpus:
+    fastText/DCLM/FineWeb-Edu recipe): TRAINS full-batch logistic
+    regression (operators/textops — driver GD on one Arrow collect
+    under ``LOCAL_FIT_BYTES``, distributed map-only GD above it) and
+    SCORES map-only. The driver gate plants a mirror-pair corpus:
     every document gets a positive twin (quality-marker sentinel token
     appended) and a negative twin (junk-marker sentinel) — near-exact
     gradient symmetry makes GD provably separate the pair (the twins
     differ only in the two sentinel buckets), so predicted labels equal
     the planted labels and the per-source prediction counts are
     closed-form."""
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from raquet_spark.operators.textops import (
-        _hashed_counts,
-        _normalize_counts,
-        score_quality_classifier,
-        train_quality_classifier,
-    )
+    from raquet_spark.operators import textops
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    # r17 shuffle/boundary diet on the bench's heaviest line, all
-    # result-identical (oracle re-verified at sf0.001/0.01/0.1):
-    # - xxhash64 buckets: the oracle is closed-form over the planted
-    #   twins — it never recomputes the buckets — so the engine-native
-    #   hash replaces hex-md5+conv (measured ~40% cheaper hash+agg
-    #   stage, guide §4; the gradient-symmetry argument is
-    #   hash-agnostic — the twins differ only in their two sentinel
-    #   buckets under ANY uniform hash). doc_feature_hash keeps md5
-    #   (its dual-dialect oracle pins it).
-    # - carry_cols rides the label and the rollup key through the
-    #   featurize groupBy, removing BOTH id-joins the old shape paid
-    #   (labels into train, source into the final agg) and with them
-    #   the separate full-text corpus cache (guide §2.4).
-    # - counts-once twins (r18): both mirror twins share the base text
-    #   and differ from it by EXACTLY six occurrences of their sentinel
-    #   token, so tokenize + explode + the wide count agg run ONCE over
-    #   the base corpus (half the map-side work and shuffle rows of the
-    #   old pos∪neg explode, guide §2.3) and each twin's count vector
-    #   is the cached base row plus 6.0 in its sentinel's bucket —
-    #   bit-identical counts (exact small-integer doubles), hence
-    #   bit-identical embeddings after the shared normalize.
-    #   keep_tokenless matches the old inner-explode row set: a twin
-    #   text always carries its 6 sentinel tokens, so base docs with
-    #   zero tokens still produce twins (from an all-zero count row).
-    base = _hashed_counts(
+    # Featurize counts ONCE over the base corpus (xxhash64 buckets,
+    # the label and the rollup key carried through the count agg):
+    # both twins share the base text and differ from it by exactly six
+    # occurrences of their sentinel token, so each twin's count vector
+    # is the base row plus 6.0 in its sentinel's bucket — a
+    # constant-folded term per column (+0.0 elsewhere; counts are never
+    # -0.0), bit-identical to counting the twin text. keep_tokenless: a
+    # twin always carries its sentinel tokens, so a base doc with zero
+    # tokens still yields two twins.
+    base = textops._hashed_counts(
         docs, dim=64, hash_fn="xxhash64", carry_cols=("source",),
         keep_tokenless=True,
-    ).persist()
-    try:
+    )
+
+    def featurize(base: DataFrame) -> DataFrame:
         def twin(sentinel: str, y: float) -> DataFrame:
-            # the sentinel's bucket is a constant-folded term per
-            # column (no probe job): +6.0 in its bucket, +0.0 elsewhere
-            # — counts are never -0.0, so the +0.0 is bit-identical.
-            # Twins share doc_id; it never reaches the output (score
-            # feeds groupBy(source, label_pred) directly)
             cols = [
                 f"c{i} + IF(pmod(xxhash64('{sentinel}'), 64) = {i},"
                 f" 6.0D, 0.0D) AS c{i}"
@@ -3740,26 +3727,33 @@ def quality_classifier_filter_spark(spark: SparkSession, sf_dir: str) -> DataFra
         counts = twin(_QCF_SENT["pos"], 1.0).unionByName(
             twin(_QCF_SENT["neg"], 0.0)
         )
-        feats = _normalize_counts(counts, 64, carry_cols=("y", "source"))
-        # n_iter: measured convergence on this gate corpus (r11,
-        # sf0.1): 3 iterations already classify every twin
-        # correctly (min |margin| 0.24), 4 gives 0.31, 8 gives
-        # 0.51 — 4 is the 2x-safety point and halves the job count
-        # of the bench's heaviest line
-        w = train_quality_classifier(
-            feats, None, dim=64, n_iter=4, lr=4.0
+        return textops._normalize_counts(counts, 64, carry_cols=("y", "source"))
+
+    def tally(feats: DataFrame, w: list[float]) -> DataFrame:
+        scored = textops.score_quality_classifier(feats, w, keep_cols=("source",))
+        out = scored.groupBy("source", "label_pred").agg(
+            F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_docs")
         )
-        scored = score_quality_classifier(feats, w, keep_cols=("source",))
-        out = (
-            scored.groupBy("source", "label_pred")
-            .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_docs"))
-        )
-        # materialize the (sources x 2)-row aggregate HERE so the
-        # cache can be released before returning (the driver
-        # collects lazily, after this function exits) — no cached
-        # blocks leak into the rest of the session. Through Arrow, so
-        # the returned plan is a JVM LocalRelation, not a Python RDD
+        # the (sources x 2)-row tally enters the returned plan as a JVM
+        # LocalRelation, so nothing it reads must outlive this call
         return spark.createDataFrame(out.toArrow(), schema=out.schema)
+
+    # n_iter 4: 3 iterations already classify every twin (min |margin|
+    # 0.24 at sf0.1), 4 is the 2x-safety point (0.31)
+    n_iter, lr = 4, 4.0
+    # two twins per document: the row bound comes from the parquet
+    # footer, with no Spark job
+    n_max = 2 * pq.read_metadata(f"{sf_dir}/documents.parquet").num_rows
+    if n_max * 64 * 8 <= textops.LOCAL_FIT_BYTES:
+        # one collect feeds both the fit and the scoring
+        t = featurize(base).select("doc_id", "embedding", "y", "source").toArrow()
+        X, y = textops._arrow_xy(t, "embedding", "y", 64)
+        return tally(spark.createDataFrame(t), textops._fit_local(X, y, n_iter, lr))
+    base = base.persist()
+    try:
+        feats = featurize(base)
+        w = textops.train_quality_classifier(feats, None, dim=64, n_iter=n_iter, lr=lr)
+        return tally(feats, w)
     finally:
         base.unpersist()
 
@@ -4493,8 +4487,9 @@ def _minhash_band_arr(d: str) -> str:
 
 def _minhash_mins_sql(d: str, source: str = "documents") -> str:
     """(doc_id, m0..m7) MinHash signature rows — the shingle/hash/min
-    pipeline from an arbitrary source relation (the r16 collapse
-    oracle plants duplicate copies via an inline UNION ALL source)."""
+    pipeline from an arbitrary source relation. :func:`_minhash_bands_sql`
+    reads ``documents``; the r16 collapse and chain-cap oracles plant
+    extra rows via an inline UNION ALL source."""
     el = lambda i: dl.arr_el("toks", i, d)  # noqa: E731
     shingle = f"concat({el('i')}, ' ', {el('i + 1')}, ' ', {el('i + 2')})"
     shingles = dl.arr_transform(
@@ -4515,36 +4510,23 @@ SELECT doc_id, {_minhash_mins(d)} FROM hashes GROUP BY doc_id
 
 
 def _minhash_bands_sql(d: str) -> str:
-    """(doc_id, bk) band keys — the shingle/hash/min pipeline that
-    feeds :func:`dedup_minhash`'s band self-join. Spark inlines the CTE
-    into both join sides but reuses the mins shuffle (``ReusedExchange``),
-    so only the final min merge and the band explode repeat per side;
-    DuckDB materializes the CTE. Corpora too large for this rendering go
-    through :func:`raquet_spark.operators.dedup.minhash_dedup_pairs`
+    """(doc_id, bk) band keys over :func:`_minhash_mins_sql`'s
+    signatures — the input of :func:`dedup_minhash`'s band self-join.
+    All 4 band keys go into ONE array that explodes to rows, so a
+    single self-equi-join on the band key finds the candidates: one
+    pass over the shingle/hash/min pipeline per join side (vs one per
+    band), one shuffle keyed by band value — the banded-LSH scale
+    shape. Spark inlines the CTE into both join sides but reuses the
+    mins shuffle (``ReusedExchange``), so only the final min merge and
+    the band explode repeat per side; DuckDB materializes the CTE.
+    Corpora too large for this rendering go through
+    :func:`raquet_spark.operators.dedup.minhash_dedup_pairs`
     (``auto_width=True``)."""
-    el = lambda i: dl.arr_el("toks", i, d)  # noqa: E731
-    shingle = f"concat({el('i')}, ' ', {el('i + 1')}, ' ', {el('i + 2')})"
-    shingles = dl.arr_transform(
-        dl.seq(1, f"{dl.arr_size('toks', d)} - 2", d), "i", shingle, d
-    )
-    h = dl.md5_int("shingle", d)
-    # all 4 band keys as prefixed strings in ONE array → explode to rows →
-    # a single self-equi-join on the band key. One pass over the expensive
-    # shingle/hash/min pipeline per join side (vs one per band), one
-    # shuffle keyed by band value — the banded-LSH scale shape.
-    band_arr = _minhash_band_arr(d)
     return f"""
-WITH tok AS (
-  SELECT doc_id, {_tokens(d)} AS toks FROM documents
-), sh AS (
-  SELECT doc_id, {dl.explode(shingles, 'shingle', d)}
-  FROM tok WHERE {dl.arr_size('toks', d)} >= 3
-), hashes AS (
-  SELECT doc_id, {h} AS h FROM sh
-), mins AS (
-  SELECT doc_id, {_minhash_mins(d)} FROM hashes GROUP BY doc_id
+WITH mins AS (
+{_minhash_mins_sql(d)}
 )
-SELECT doc_id, {dl.explode(band_arr, 'bk', d)} FROM mins
+SELECT doc_id, {dl.explode(_minhash_band_arr(d), 'bk', d)} FROM mins
 """
 
 

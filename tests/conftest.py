@@ -44,5 +44,18 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def next_job_id(spark):
+    """Reads the DAG scheduler's next job id: its difference across a
+    call is the number of Spark jobs the call launched."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def read() -> int:
+        jid = scheduler.nextJobId()
+        return jid if isinstance(jid, int) else jid.get()
+
+    return read
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

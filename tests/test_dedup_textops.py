@@ -976,6 +976,48 @@ def test_quality_classifier_train_and_score(spark):
     assert n_bad == 0  # exact separation on the planted pair corpus
 
 
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_quality_classifier_filter_local_and_over_cap_agree(spark, monkeypatch):
+    """The classifier query fits on the driver from one Arrow collect
+    under ``LOCAL_FIT_BYTES`` and runs the distributed GD above it.
+    Both give the same per-source tally, and neither leaves a persisted
+    RDD (a cached Dataset's blocks are one) behind. A budget of 0 also
+    sends ``train_quality_classifier`` down its distributed loop, so
+    the local fit never runs on that path."""
+    from raquet_spark.operators import textops
+    from raquet_spark.queries import load_table, quality_classifier_filter_spark
+
+    fits = []
+    fit_local = textops._fit_local
+
+    def spy(*args):
+        fits.append(args[0].shape)
+        return fit_local(*args)
+
+    monkeypatch.setattr(textops, "_fit_local", spy)
+    before = _persisted_rdds(spark)
+
+    def tally() -> list[tuple]:
+        out = quality_classifier_filter_spark(spark, SF_DIR)
+        assert _persisted_rdds(spark) <= before
+        return sorted(tuple(r) for r in out.collect())
+
+    local = tally()
+    assert fits == [(1000, 64)]  # 2 twins x 500 documents, one fit
+    monkeypatch.setattr(textops, "LOCAL_FIT_BYTES", 0)
+    fits.clear()
+    over_cap = tally()
+    assert fits == []
+    # the planted twins are separated exactly: every document is
+    # predicted once positive and once negative
+    per_source = load_table(spark, SF_DIR, "documents").groupBy("source").count()
+    want = sorted((s, lab, n) for s, n in per_source.collect() for lab in (0, 1))
+    assert local == over_cap == want
+
+
 def test_quality_classifier_per_iteration_plan(spark):
     """Each GD iteration is a single scan: the margin/gradient job over
     the cached features contains no Python UDF and no per-doc join —
@@ -1206,7 +1248,7 @@ def test_max_bits_for_recall_clamps_self_sizing(spark):
     assert tables_for_recall(0.95, 13) <= 16  # the r16-probed point
 
 
-def test_components_driver_fast_path_matches_loop(spark):
+def test_components_driver_fast_path_matches_loop(spark, next_job_id):
     """r17: graphs at or under ``small_graph_edges`` are labeled by a
     bounded driver-side union-find instead of the pointer-jumping join
     loop (~10 AQE stage-jobs per round — pure scheduler floor on a toy
@@ -1257,3 +1299,23 @@ def test_components_driver_fast_path_matches_loop(spark):
     for out in (connected_components(df), fast_e):
         plan = optimized_plan(out)
         assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan
+
+    # the cap probe is the first action over the lazily checkpointed
+    # edge list: the edge plan runs once, and the collect after the
+    # probe reads the stored blocks (one stage, no shuffle stage)
+    sc = spark.sparkContext
+    scans = sc.accumulator(0)
+
+    @F.udf("long")
+    def scanned(x):
+        scans.add(1)
+        return x
+
+    counted = df.withColumn("id_a", scanned("id_a"))
+    first_job = next_job_id()
+    labels = connected_components(counted)
+    collect_job = next_job_id() - 1
+    assert collect_job > first_job
+    assert len(sc.statusTracker().getJobInfo(collect_job).stageIds) == 1
+    assert scans.value == len(edges)
+    assert rows(labels) == fast
