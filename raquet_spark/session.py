@@ -23,7 +23,12 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     """Make ``raquet_spark`` importable on executors regardless of the
     consumer's working directory or PYTHONPATH, by shipping the package
     as a zip via ``addPyFile`` — the same mechanism used to deploy to a
-    real cluster. Idempotent per application."""
+    real cluster. Idempotent per application.
+
+    The first raquet_spark UDF a worker unpickles imports the package,
+    which installs :func:`raquet_spark._cache_zip_directories` there:
+    the worker then stops re-reading every zip's directory (this one,
+    ``pyspark.zip``, py4j) at the start of each Python task."""
     sc = spark.sparkContext
     app = sc.applicationId
     if app in _SHIPPED:

@@ -8,10 +8,12 @@ kind of artifact without GDAL, through three writers:
 * :func:`write_geotiff` — one striped file. Strip payloads are
   assembled DISTRIBUTED — one strip per tile row via ``applyInPandas``
   keyed by ``qb_y`` (:func:`strip_table`; full raster width ×
-  ``block_height`` rows, pixel-interleaved across bands) — and the
-  driver only streams the already-encoded strips to disk in order
-  (``toLocalIterator``; bounded memory). Writing one .tif is inherently
-  a single-file funnel, so the driver does no pixel math, only IO.
+  ``block_height`` rows, pixel-interleaved across bands; the tile rows
+  are range-partitioned first, so strips come out in file order and
+  the strip stage runs once) — and the driver only streams the
+  already-encoded strips to disk in order (``toLocalIterator``;
+  bounded memory). Writing one .tif is inherently a single-file
+  funnel, so the driver does no pixel math, only IO.
 * :func:`write_geotiff_cog` — one tiled Cloud-Optimized GeoTIFF whose
   TIFF tiles are the RaQuet blocks (map-only encode, no shuffle).
 * :func:`write_geotiff_sharded` — one striped file per group of tile
@@ -231,6 +233,7 @@ def strip_table(
     extent: tuple[int, int, int, int],
     bands: list[str] | None = None,
     tiff_compression: str | None = None,
+    ordered: bool = False,
 ) -> tuple[DataFrame, dict]:
     """Distributed strip assembly over the tile-grid ``extent``
     ``(x0, y0, x1, y1)`` (inclusive) of ``df``'s tiles at ``metadata``'s
@@ -238,7 +241,9 @@ def strip_table(
 
     Returns ``(strips, info)`` where ``strips`` has one row per tile row
     holding tiles — ``(strip bigint, data binary)``, ``strip`` counted
-    from ``y0`` — and ``info`` is the :func:`_level_info` geometry."""
+    from ``y0`` — and ``info`` is the :func:`_level_info` geometry.
+    ``ordered=True`` range-partitions the tile rows before the Python
+    stage, so the rows come out in ``strip`` order with no sort."""
     from raquet_spark.session import ensure_package_shipped
 
     ensure_package_shipped(df.sparkSession)
@@ -269,6 +274,7 @@ def strip_table(
         .transform(lambda d: pin_group_width(
             d, "qb_y",
             approx_pixels=info["n_tiles"] * bw * bh * nbands,
+            ordered=ordered,
         ))
         .groupBy("qb_y")
         .applyInPandas(assemble, schema="strip bigint, data binary")
@@ -323,16 +329,19 @@ def _ordered_segments(
 ) -> Iterator[bytes]:
     """Payloads ``0 .. n-1`` in file order: each ``segments`` row's
     ``data`` at its ``key`` index, ``fill`` for every index no row
-    carries (tile rows / tiles absent from the data).
+    carries (tile rows / tiles absent from the data). ``segments`` must
+    already be in ``key`` order; this does not sort.
 
     ``prefetchPartitions=True`` overlaps independent jobs:
     toLocalIterator runs one fetch job per result partition; with
-    prefetch the NEXT partition's fetch/sort runs while the driver
-    writes the current one's payloads, instead of strictly alternating
+    prefetch the NEXT partition's fetch runs while the driver writes
+    the current one's payloads, instead of strictly alternating
     compute→write→compute. Partitions arrive in order, so the bytes are
     unchanged; the driver buffers at most one extra partition."""
     expected = 0
-    for row in segments.orderBy(key).toLocalIterator(prefetchPartitions=True):
+    for row in segments.toLocalIterator(prefetchPartitions=True):
+        if row[key] < expected:
+            raise ValueError(f"segments out of {key} order")
         yield from itertools.repeat(fill, row[key] - expected)
         yield bytes(row["data"])
         expected = row[key] + 1
@@ -507,7 +516,9 @@ def write_geotiff(
         (
             lv.info,
             _ordered_segments(
-                strip_table(lv.df, lv.metadata, lv.extent, bands, compression)[0],
+                strip_table(
+                    lv.df, lv.metadata, lv.extent, bands, compression, ordered=True
+                )[0],
                 "strip", lv.info["n_strips"], lv.fill,
             ),
         )
@@ -661,7 +672,10 @@ def write_geotiff_cog(
                 f.write(ifd)
                 ifd_pos += len(ifd)
             for k in data_order:
-                staged = spark.read.parquet(dirs[k])
+                # a parquet read does not keep the write's row order,
+                # so the staged payloads (no Python left in their plan)
+                # are sorted here
+                staged = spark.read.parquet(dirs[k]).orderBy("idx")
                 for data in _ordered_segments(
                     staged, "idx", plan[k].info["n_tiles"], plan[k].fill
                 ):

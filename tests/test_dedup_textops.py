@@ -30,7 +30,11 @@ SF_DIR = "/root/testdata/sf0.001"
 def docs(spark):
     from raquet_spark.queries import load_table
 
-    return load_table(spark, SF_DIR, "documents").cache()
+    docs = load_table(spark, SF_DIR, "documents").cache()
+    yield docs
+    # a cached Dataset outlives the module otherwise: later modules'
+    # plans of the same table then read the InMemoryRelation
+    docs.unpersist()
 
 
 def test_exact_dedup(spark, docs):

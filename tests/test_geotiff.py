@@ -65,6 +65,31 @@ def test_geotiff_missing_tile_rows_filled(spark, raster, tmp_path):
     assert not np.all(arr[:, 0:16, 0] == -1.0)
 
 
+def test_geotiff_strip_stage_runs_once(spark, raster, tmp_path, next_job_id):
+    """The strips reach the driver in file order without a sort: two
+    jobs for the max-zoom extent, then the range sample of the tile
+    rows, the tile-row exchange and the strip stage (5 jobs). Sorting
+    the encoded strips ran the Python strip stage twice, once for the
+    sort's range sample and once for its exchange: 6 jobs here."""
+    tiles, meta = raster
+    path = str(tmp_path / "jobs.tif")
+    j0 = next_job_id()
+    write_geotiff(tiles, meta, path)
+    assert next_job_id() - j0 == 5
+
+
+def test_geotiff_unordered_segments_raise(spark):
+    """The single-file writers stream segments as they arrive; a source
+    out of key order is an error, not a silently scrambled file."""
+    from raquet_spark.sources.geotiff import _ordered_segments
+
+    segs = spark.createDataFrame(
+        [(1, b"b"), (0, b"a")], "strip bigint, data binary"
+    ).coalesce(1)
+    with pytest.raises(ValueError, match="out of strip order"):
+        list(_ordered_segments(segs, "strip", 2, b"-"))
+
+
 def test_geotiff_partial_file_removed_on_failure(spark, raster, tmp_path, monkeypatch):
     """The compressed path can only hit the classic-TIFF 4GB limit
     mid-stream; a failure inside the strip writer must not leave a
